@@ -8,8 +8,10 @@ compiles to *column expressions* at transform time — features stay ordinary
 columns, not an opaque vector, so every downstream query/inspection stays
 columnar and codegen'd. A ``VectorAssembler`` step happens only at the edge
 of Spark ML training (operators/training.py). Fitting = one wide aggregate
-job; transform = zero-shuffle projection; persistence = a small JSON doc
-(replaces joblib, SURVEY.md §2.1 S5).
+job (scaler statistics and category sets; ``build_features`` adds the
+frozen high_value quantile to it, and the optional outlier clip runs its
+own stats aggregate before it); transform = zero-shuffle projection;
+persistence = a small JSON doc (replaces joblib, SURVEY.md §2.1 S5).
 
 sklearn-parity traps handled (SURVEY.md §7.3):
 - one-hot basis: categories sorted ascending, FIRST dropped, unknown at
@@ -51,6 +53,12 @@ def _tenure_bucket(c: Column) -> Column:
     return expr.otherwise(F.lit("nan"))
 
 
+def _high_value_quantile() -> Column:
+    """The high_value cut: exact 75th percentile of monthly_charges with
+    linear interpolation (= pandas quantile(0.75))."""
+    return F.percentile("monthly_charges", F.lit(0.75))
+
+
 def add_engineered_features(
     df: DataFrame, high_value_threshold: float | None = None
 ) -> DataFrame:
@@ -58,30 +66,29 @@ def add_engineered_features(
     reproduces the reference's batch-local 75th-percentile behavior; passing
     the frozen fit-time threshold gives the corrected serving path."""
     if high_value_threshold is None:
-        # exact percentile with linear interpolation = pandas quantile(0.75)
-        high_value_threshold = df.agg(
-            F.percentile("monthly_charges", F.lit(0.75))
-        ).collect()[0][0]
+        high_value_threshold = df.agg(_high_value_quantile()).collect()[0][0]
+    return _engineer(
+        df, (F.col("monthly_charges") > F.lit(high_value_threshold)).cast("int")
+    )
 
-    return (
-        df.withColumn(
-            "charge_per_tenure",
-            F.when(
-                F.col("tenure") > 0, F.col("total_charges") / F.col("tenure")
-            ).otherwise(F.col("monthly_charges")),
-        )
-        .withColumn("tenure_bucket", _tenure_bucket(F.col("tenure")))
-        .withColumn(
-            "high_value",
-            (F.col("monthly_charges") > F.lit(high_value_threshold)).cast("int"),
-        )
-        .withColumn(
-            "support_intensity",
-            F.when(
-                F.col("tenure") > 0,
-                F.col("num_support_tickets") / F.col("tenure"),
-            ).otherwise(F.col("num_support_tickets").cast("double")),
-        )
+
+def _engineer(df: DataFrame, high_value: Column | None) -> DataFrame:
+    """F1-F4 as columns; ``high_value=None`` leaves high_value out (the
+    fit path, where no fitted column reads it)."""
+    df = df.withColumn(
+        "charge_per_tenure",
+        F.when(
+            F.col("tenure") > 0, F.col("total_charges") / F.col("tenure")
+        ).otherwise(F.col("monthly_charges")),
+    ).withColumn("tenure_bucket", _tenure_bucket(F.col("tenure")))
+    if high_value is not None:
+        df = df.withColumn("high_value", high_value)
+    return df.withColumn(
+        "support_intensity",
+        F.when(
+            F.col("tenure") > 0,
+            F.col("num_support_tickets") / F.col("tenure"),
+        ).otherwise(F.col("num_support_tickets").cast("double")),
     )
 
 
@@ -150,8 +157,15 @@ class Preprocessor:
     fitted: bool = False
 
     def fit(self, df: DataFrame) -> "Preprocessor":
-        """One wide aggregate for scaler statistics + one distinct pass per
-        categorical column (tiny results: category sets)."""
+        """One wide aggregate, one collect: scaler statistics and the
+        category set of every categorical column (collect_set; tiny
+        results)."""
+        aggs = self.fit_aggregates()
+        return self.fit_stats(df.agg(*aggs).collect()[0].asDict() if aggs else {})
+
+    def fit_aggregates(self) -> list[Column]:
+        """The aggregate columns ``fit_stats`` reads, for a caller that
+        folds more statistics into the same collect."""
         aggs = []
         for c in self.numerical_cols:
             if self.scaling_method == "minmax":
@@ -168,7 +182,11 @@ class Preprocessor:
                     F.avg(c).alias(f"{c}__a"),
                     F.stddev_pop(c).alias(f"{c}__b"),  # sklearn StandardScaler uses ddof=0
                 ]
-        stats = df.agg(*aggs).collect()[0].asDict() if aggs else {}
+        aggs += [F.collect_set(c).alias(f"{c}__set") for c in self.categorical_cols]
+        return aggs
+
+    def fit_stats(self, stats: dict) -> "Preprocessor":
+        """Fit from the collected ``fit_aggregates`` row (as a dict)."""
         for c in self.numerical_cols:
             a, b = stats[f"{c}__a"], stats[f"{c}__b"]
             if self.scaling_method == "minmax":
@@ -178,12 +196,9 @@ class Preprocessor:
             self.scaler_stats[c] = (float(center), float(scale))
 
         for c in self.categorical_cols:
-            vals = [
-                r[0]
-                for r in df.select(c).distinct().collect()
-                if r[0] is not None
-            ]
-            self.categories[c] = sorted(str(v) for v in vals)
+            self.categories[c] = sorted(
+                str(v) for v in stats[f"{c}__set"] if v is not None
+            )
 
         self.fitted = True
         return self
@@ -299,19 +314,22 @@ def build_features(
     categorical = feature_cfg["categorical"] + ENGINEERED_CATEGORICAL
 
     if fit:
-        # freeze the fit-batch quantile for serving (documented deviation
-        # from the reference's batch-local recompute)
-        threshold = df.agg(
-            F.percentile("monthly_charges", F.lit(0.75))
-        ).collect()[0][0]
-        df = add_engineered_features(df, high_value_threshold=threshold)
+        # One collect fits the preprocessor and freezes the fit-batch
+        # high_value quantile for serving (documented deviation from the
+        # reference's batch-local recompute). high_value itself is not
+        # engineered here: no fitted column reads it and transform drops it.
+        df = _engineer(df, None)
         preprocessor = Preprocessor(
             scaling_method=feature_cfg.get("scaling_method", "standard"),
             numerical_cols=numerical,
             categorical_cols=categorical,
         )
-        preprocessor.high_value_threshold = threshold
-        preprocessor.fit(df)
+        stats = df.agg(
+            *preprocessor.fit_aggregates(),
+            _high_value_quantile().alias("__high_value"),
+        ).collect()[0].asDict()
+        preprocessor.fit_stats(stats)
+        preprocessor.high_value_threshold = stats["__high_value"]
     else:
         if preprocessor is None:
             raise ValueError("preprocessor must be provided when fit=False")

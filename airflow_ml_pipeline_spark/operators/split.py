@@ -7,6 +7,31 @@ guarantee sklearn's ``train_test_split(stratify=y)`` gives
 (/root/reference/src/ml_pipeline/run_pipeline.py:53-55).
 
 One shuffle (the per-class window); deterministic under the seed.
+
+Where the partitions go: the window exchange hashes rows by label alone,
+so each class lands in one of the ``spark.sql.shuffle.partitions`` (32 in
+the engine session) and the rest stay empty. AQE coalesces empty
+partitions away on an uncached plan, but a cached frame keeps its physical
+partitioning (``canChangeCachedPlanOutputPartitioning`` is false), so the
+pipeline's cached train/test/fold frames held 32 partitions of which 2 had
+rows, and every job over them (each L-BFGS iteration, each CV fold filter,
+each evaluation) paid 30 tasks for nothing. Both operators therefore end
+in ``coalesce(1)``: narrow and after the window, so it adds no exchange and
+moves no row between train and test. One partition, not one per class:
+the label-only window already runs each class through a single task, and
+``coalesce(2)`` groups neighbouring partitions, so it would still put both
+populated partitions (18 and 29 for a 0/1 label at 32) into one task.
+
+The trade: the single partition gives up the two-class parallelism. The
+window's sort of both classes (above the coalesce, in the same stage) and
+every later pass over the cached frames run in one task, not two. On
+4 cores ``run_pipeline`` with the benchmark's trimmed grid still went from
+a median 44.5 s to 29.4 s at the paper's 10,000 rows (4 pairs), as at the
+benchmark's 2,000; larger inputs were not measured.
+
+Scale note: the label-only window is itself the limiter at 100 TB (one
+task per class sorts the whole class, whatever the coalesce does after it).
+Replacing it with a distributed per-class rank is out of scope here.
 """
 
 from __future__ import annotations
@@ -26,8 +51,9 @@ def stratified_split(
         "__n", F.count(F.lit(1)).over(n)
     )
     is_test = F.col("__rk") <= F.round(F.col("__n") * test_size)
-    test = ranked.filter(is_test).drop("__rk", "__n")
-    train = ranked.filter(~is_test).drop("__rk", "__n")
+    # coalesce(1): see the module docstring (right-sizes the cached frames)
+    test = ranked.filter(is_test).drop("__rk", "__n").coalesce(1)
+    train = ranked.filter(~is_test).drop("__rk", "__n").coalesce(1)
     return train, test
 
 
@@ -38,7 +64,7 @@ def stratified_fold_column(
     CrossValidator(foldCol=...) — Spark CV is not stratified natively
     (SURVEY.md §2.7 T6); ntile over a seeded per-class order is."""
     w = Window.partitionBy(label_col).orderBy(F.rand(seed))
-    return df.withColumn(fold_col, F.ntile(n_folds).over(w) - 1)
+    return df.withColumn(fold_col, F.ntile(n_folds).over(w) - 1).coalesce(1)
 
 
 def sample_exact(df: DataFrame, n: int, seed: int = 42) -> DataFrame:

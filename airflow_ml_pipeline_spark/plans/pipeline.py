@@ -11,6 +11,14 @@ Spark restatement (SURVEY.md §3.1): stages 1-3 build one lazy DataFrame
 lineage; the featurized training frame is cached before CV (it is scanned
 folds × grid-points times); all inter-stage state is either tiny dicts or
 the fitted artifacts.
+
+Caching note: a cached frame keeps the partitioning it was computed with
+(AQE does not coalesce a cached plan), so the cached train/test frames, and
+the fold frame CV caches from train, come out of operators/split.py as
+single partitions. Every L-BFGS iteration, CV fold filter and evaluation
+job over them is then one task, not one per shuffle partition with all
+but two empty. The feature fit before the split is two collects: the
+outlier-clip statistics, then the preprocessor's one aggregate.
 """
 
 from __future__ import annotations

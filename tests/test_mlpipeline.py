@@ -7,10 +7,15 @@ same-seed-same-session determinism + distributional assertions (SURVEY.md
 
 from __future__ import annotations
 
+import ast
 import json
+import uuid
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.window import Window
 
 from airflow_ml_pipeline_spark.operators import (
     deployment,
@@ -148,6 +153,51 @@ def test_validate_raises_with_failed_check_names(spark, customers):
         validate.validate_data(bad)
 
 
+def _failed_checks(df) -> set[str]:
+    try:
+        validate.validate_data(df)
+    except ValueError as e:
+        return set(ast.literal_eval(str(e).split(": ", 1)[1]))
+    return set()
+
+
+def test_no_duplicates_matches_drop_duplicates(spark, customers):
+    """V2 is a distinct count inside the one validation aggregate; its
+    verdict must match dropDuplicates(), which groups null fields as equal
+    (a duplicated row that contains a null is still a duplicate)."""
+    rows = [tuple(r) for r in customers.orderBy(*customers.columns).limit(150).collect()]
+    with_null = tuple(
+        None if c == "payment_method" else v for c, v in zip(customers.columns, rows[0])
+    )
+    schema = T.StructType(
+        [T.StructField(f.name, f.dataType, True) for f in customers.schema]
+    )
+    cases = {
+        "clean": (rows, False),
+        "duplicated row": (rows + [rows[0]], True),
+        "row with a null, no duplicate": (rows + [with_null], False),
+        "duplicated row with a null": (rows + [with_null, with_null], True),
+    }
+    for name, (data, duplicated) in cases.items():
+        df = spark.createDataFrame(data, schema)
+        assert (df.dropDuplicates().count() != df.count()) == duplicated, name
+        assert ("no_duplicates" in _failed_checks(df)) == duplicated, name
+
+
+def test_target_binary_flags_a_non_binary_label(customers):
+    """A label outside {0, 1} fails target_binary; a null label does not
+    (it is a missing value, not a third class)."""
+    assert "target_binary" not in _failed_checks(customers)
+    three = customers.withColumn(
+        "churn", F.when(F.col("tenure") == 1, F.lit(2)).otherwise(F.col("churn"))
+    )
+    assert "target_binary" in _failed_checks(three)
+    nulled = customers.withColumn(
+        "churn", F.when(F.col("tenure") == 1, F.lit(None)).otherwise(F.col("churn"))
+    )
+    assert _failed_checks(nulled) == {"no_missing_values"}
+
+
 def test_drift_profile_shape(customers):
     prof = validate.drift_profile(customers, ["tenure", "monthly_charges"])
     assert prof["n_rows"] == N
@@ -232,6 +282,63 @@ def test_standard_scaling_zero_mean_unit_std(customers, mini_config):
     assert abs(row[1] - 1.0) < 1e-6
 
 
+def _jobs_launched(spark, fn) -> int:
+    """Spark jobs ``fn`` launches, counted under a fresh job group."""
+    sc = spark.sparkContext
+    group = uuid.uuid4().hex
+    sc.setJobGroup(group, "job count")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_preprocessor_fit_is_one_collect_matching_per_column_path(spark):
+    """The fit folds the category sets into the scaler aggregate: same
+    statistics as one aggregate plus one distinct() per categorical column,
+    from the jobs of a single collect. Nulls are dropped and categories
+    sorted as strings."""
+    df = spark.createDataFrame(
+        [(30.0, "b", 2), (18.5, None, 1), (99.0, "a", None), (70.0, "c", 2),
+         (18.5, "a", 10), (55.0, "b", 1)],
+        "monthly_charges double, k string, n int",
+    )
+    prep = features.Preprocessor("standard", ["monthly_charges"], ["k", "n"])
+    fit_jobs = _jobs_launched(spark, lambda: prep.fit(df))
+
+    m, s = df.agg(F.avg("monthly_charges"), F.stddev_pop("monthly_charges")).collect()[0]
+    assert prep.scaler_stats == {"monthly_charges": (m, s)}
+    assert prep.categories == {
+        c: sorted(str(r[0]) for r in df.select(c).distinct().collect() if r[0] is not None)
+        for c in ("k", "n")
+    }
+    assert prep.categories == {"k": ["a", "b", "c"], "n": ["1", "10", "2"]}
+    assert prep.high_value_threshold is None
+    one_collect = _jobs_launched(spark, lambda: df.agg(F.count(F.lit(1))).collect())
+    assert fit_jobs == one_collect
+
+
+def test_build_features_freezes_threshold_of_clipped_frame(spark, customers, mini_config):
+    """The frozen threshold comes out of the preprocessor's fit aggregate;
+    it is still the 75th percentile of the (outlier-clipped) fit batch, and
+    the fit path is two collects: the clip statistics, then the fit."""
+    cfg = mini_config["features"]
+    assert cfg["handle_outliers"]
+    out = {}
+    fit_jobs = _jobs_launched(
+        spark, lambda: out.update(prep=features.build_features(customers, mini_config, fit=True)[1])
+    )
+    clipped = features.clip_outliers(
+        customers, cfg["numerical"], cfg["outlier_threshold"]
+    )
+    assert out["prep"].high_value_threshold == clipped.agg(
+        F.percentile("monthly_charges", F.lit(0.75))
+    ).collect()[0][0]
+    one_collect = _jobs_launched(spark, lambda: customers.agg(F.count(F.lit(1))).collect())
+    assert fit_jobs == 2 * one_collect
+
+
 # --- split -------------------------------------------------------------------
 
 
@@ -242,6 +349,37 @@ def test_stratified_split_exact_proportions(customers):
         n_test = test.filter(F.col("churn") == label).count()
         assert n_test == round(n * 0.2)
     assert train.count() + test.count() == N
+
+
+def test_split_frames_are_one_partition_with_the_window_rows(customers):
+    """Both split outputs and the fold frame stay single-partition when
+    cached (a cached plan keeps its partitioning; AQE does not coalesce it),
+    and the coalesce moves no row: train/test and the fold labels are
+    exactly those of the same window without it."""
+    train, test = split.stratified_split(customers, "churn", test_size=0.2, seed=42)
+    folded = split.stratified_fold_column(customers, "churn", 3, seed=1)
+    frames = [f.cache() for f in (train, test, folded)]
+    try:
+        assert [f.rdd.getNumPartitions() for f in frames] == [1, 1, 1]
+    finally:
+        for f in frames:
+            f.unpersist()
+
+    ranked = customers.withColumn(
+        "__rk", F.row_number().over(Window.partitionBy("churn").orderBy(F.rand(42)))
+    ).withColumn("__n", F.count(F.lit(1)).over(Window.partitionBy("churn")))
+    is_test = F.col("__rk") <= F.round(F.col("__n") * 0.2)
+
+    def rows(df):
+        return Counter(tuple(r) for r in df.collect())
+
+    assert rows(test) == rows(ranked.filter(is_test).drop("__rk", "__n"))
+    assert rows(train) == rows(ranked.filter(~is_test).drop("__rk", "__n"))
+    unfolded = customers.withColumn(
+        "fold",
+        F.ntile(3).over(Window.partitionBy("churn").orderBy(F.rand(1))) - 1,
+    )
+    assert rows(folded) == rows(unfolded)
 
 
 def test_stratified_folds_balanced(customers):
