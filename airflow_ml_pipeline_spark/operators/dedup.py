@@ -1840,7 +1840,17 @@ def containment_dropped_ids(batch_fps: DataFrame, hist_fps: DataFrame) -> DataFr
     discriminative (doc_id, fp) postings for the incoming batch and the
     historical store, return the batch doc_ids with
     |fp(b) ∩ fp(h)| / |fp(b)| >= CONTAINMENT_THRESHOLD for some historical
-    doc h, scoring only batch docs with >= MIN_FP_COUNT postings."""
+    doc h, scoring only batch docs with >= MIN_FP_COUNT postings.
+
+    Raises ``TypeError`` when the two ``fp`` columns differ in type: a
+    binary side joined to a hex-string side matches no row and would
+    silently drop nothing."""
+    b_type, h_type = batch_fps.schema["fp"].dataType, hist_fps.schema["fp"].dataType
+    if b_type != h_type:
+        raise TypeError(
+            f"containment fp types differ: batch {b_type.simpleString()}"
+            f" vs history {h_type.simpleString()}"
+        )
     sizes = batch_fps.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     shared = (
         batch_fps.select(F.col("doc_id").alias("bdoc"), "fp")

@@ -407,18 +407,12 @@ def stream_doc_quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     fold (``margin_fold``), so throughput is bounded by scan + codegen
     only and the no-data batch is safely skipped (nothing watermarked)."""
     from airflow_ml_pipeline_spark.streaming.ingest import (
+        arrivals_stream,
         stage_documents_stream,
     )
     from airflow_ml_pipeline_spark.streaming.sources import run_available_now
 
-    arrivals = stage_documents_stream(spark, sf_dir)
-    schema = spark.read.parquet(arrivals).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .format("parquet")
-        .load(arrivals)
-    )
+    stream = arrivals_stream(spark, stage_documents_stream(spark, sf_dir))
     m = margin_fold(F.col("text"))
     scored = stream.select(
         "doc_id",

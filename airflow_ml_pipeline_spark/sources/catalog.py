@@ -71,6 +71,27 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
+def table_fingerprint(sf_dir: str, name: str) -> str:
+    """16-hex content fingerprint of the table ``load_table`` scans: a
+    sha256 of the absolute ``{sf_dir}/{name}.parquet`` path plus every
+    file's (mtime_ns, size). A table regenerated in place, or two sf_dirs
+    sharing a basename, get a fresh value — the key that every derived
+    store (ingest state, stream staging, the rollup, the IVF caches) is
+    tagged with, so none of them serves a stale corpus."""
+    import hashlib
+
+    src = os.path.join(os.path.abspath(sf_dir), f"{name}.parquet")
+    h = hashlib.sha256(src.encode())
+    if os.path.isdir(src):
+        for entry in sorted(os.listdir(src)):
+            st = os.stat(os.path.join(src, entry))
+            h.update(f"{entry}:{st.st_mtime_ns}:{st.st_size};".encode())
+    elif os.path.exists(src):
+        st = os.stat(src)
+        h.update(f"{st.st_mtime_ns}:{st.st_size};".encode())
+    return h.hexdigest()[:16]
+
+
 def load_spread(
     spark: SparkSession, sf_dir: str, name: str, by: str | None = None
 ) -> DataFrame:

@@ -22,52 +22,62 @@ independent of micro-batch boundaries, which is what the driver oracle
 checks; per-duplicate winner resolution within one batch is min(doc_id),
 across batches it is first-arrival (test-asserted with controlled
 batches).
+
+State layout and GC (one helper, ``ingest_dirs``): every family keeps its
+state under ``INGEST_ROOT/{family}-{sf}-{fp}/``, where ``sf`` is the
+corpus directory's basename and ``fp`` the ``table_fingerprint`` of the
+table the family streams (documents, events or embeddings); the exact
+ingester's family is empty, so its tag is ``{sf}-{fp}``. Inside sit
+``arrivals`` (single-file micro-batches, ``_staged`` marker last),
+``store`` (``batch_id=N`` partitions), ``checkpoint`` and any outputs of
+the family's own (survivors, stats). A family may replay another's
+arrivals (pii reads the funnel's; tumbling and stateful read the
+session's) but owns its store and checkpoint. Resolving a family's dirs
+removes that family's OTHER tags, ``{family}-{sf}-<16 hex>`` exactly (so
+no family's GC can match another family's tag), once untouched for 2 h:
+a regenerated corpus leaks nothing, and a younger dir, possibly a
+concurrent session's, is left alone.
 """
 
 from __future__ import annotations
 
-import hashlib
+import glob
 import os
+import re
 import shutil
+import time
+from typing import Callable, Iterable, NamedTuple
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from airflow_ml_pipeline_spark.plans.registry import query
-from airflow_ml_pipeline_spark.sources.catalog import load_table
+from airflow_ml_pipeline_spark.sources.catalog import load_table, table_fingerprint
 
 INGEST_ROOT = "/tmp/spark_graft_ingest"
 N_STAGE_FILES = 4
 
 
-def _corpus_fingerprint(sf_dir: str) -> str:
-    """Path + (mtime_ns, size) hash of documents.parquet — a corpus
-    regenerated in place gets a fresh staging/store/checkpoint trio."""
-    src = os.path.join(os.path.abspath(sf_dir), "documents.parquet")
-    h = hashlib.sha256(src.encode())
-    if os.path.isdir(src):
-        for name in sorted(os.listdir(src)):
-            st = os.stat(os.path.join(src, name))
-            h.update(f"{name}:{st.st_mtime_ns}:{st.st_size};".encode())
-    elif os.path.exists(src):
-        st = os.stat(src)
-        h.update(f"{st.st_mtime_ns}:{st.st_size};".encode())
-    return h.hexdigest()[:16]
+class StateDirs(NamedTuple):
+    """One family's state directories (see the module docstring)."""
+
+    arrivals: str
+    store: str
+    checkpoint: str
+
+    def aux(self, name: str) -> str:
+        """A family-specific output directory beside the store."""
+        return os.path.join(os.path.dirname(self.store), name)
 
 
 def _prune_stale_tags(prefix: str, keep_tag: str, min_age_s: float = 7200) -> None:
-    """GC: remove sibling state dirs for the SAME corpus basename but a
-    DIFFERENT content fingerprint — a regenerated corpus leaves the old
-    tag's staging/store/checkpoint unreachable forever otherwise. Only
-    dirs untouched for ``min_age_s`` are removed so a concurrently
-    running session (round-3 ADVICE raised exactly this race class) is
-    never pulled out from under."""
-    import time
-
+    """Remove ``{prefix}-<16 hex>`` dirs other than ``keep_tag`` that were
+    untouched for ``min_age_s`` (the GC rule of the module docstring)."""
     if not os.path.isdir(INGEST_ROOT):
         return
+    tag_re = re.compile(re.escape(prefix) + "-[0-9a-f]{16}")
     for d in os.listdir(INGEST_ROOT):
-        if not d.startswith(prefix + "-") or d == keep_tag:
+        if d == keep_tag or not tag_re.fullmatch(d):
             continue
         path = os.path.join(INGEST_ROOT, d)
         try:
@@ -77,38 +87,109 @@ def _prune_stale_tags(prefix: str, keep_tag: str, min_age_s: float = 7200) -> No
             pass
 
 
-def ingest_dirs(sf_dir: str) -> tuple[str, str, str]:
-    """(staging, store, checkpoint) directories for this corpus version."""
+def ingest_dirs(
+    sf_dir: str, family: str = "", table: str = "documents"
+) -> StateDirs:
+    """(arrivals, store, checkpoint) of ``family`` replaying ``table`` of
+    this corpus version; prunes the family's stale tags."""
     base = os.path.basename(os.path.normpath(sf_dir))
-    tag = f"{base}-{_corpus_fingerprint(sf_dir)}"
-    _prune_stale_tags(base, tag)
+    prefix = f"{family}-{base}" if family else base
+    tag = f"{prefix}-{table_fingerprint(sf_dir, table)}"
+    _prune_stale_tags(prefix, tag)
     root = os.path.join(INGEST_ROOT, tag)
+    return StateDirs(*(os.path.join(root, d) for d in StateDirs._fields))
+
+
+def _batch_dir(root: str, batch_id: int) -> str:
+    """The ``batch_id=N`` partition a micro-batch owns under ``root``."""
+    return os.path.join(root, f"batch_id={batch_id}")
+
+
+def _stage_single_file_batches(arrivals: str, batches: Iterable[DataFrame]) -> str:
+    """Write each frame of ``batches`` as ONE parquet file
+    ``batch-i.parquet`` with strictly increasing mtimes AND sorted names,
+    so the file source's (mtime, path) ordering replays file i as
+    micro-batch i. Built in a private dir and renamed into place;
+    idempotent (the ``_staged`` marker short-circuits before ``batches``
+    is iterated, so a schedule generator's setup jobs and guards run only
+    when staging)."""
+    marker = os.path.join(arrivals, "_staged")
+    if os.path.exists(marker):
+        return arrivals
+    tmp = f"{arrivals}.build.{os.getpid()}"
+    for i, b in enumerate(batches):
+        part_dir = os.path.join(tmp, f"part{i}")
+        b.coalesce(1).write.mode("overwrite").parquet(part_dir)
+        dst = os.path.join(tmp, f"batch-{i}.parquet")
+        os.rename(glob.glob(os.path.join(part_dir, "part-*.parquet"))[0], dst)
+        shutil.rmtree(part_dir, ignore_errors=True)
+        t = time.time() + i
+        os.utime(dst, (t, t))
+    try:
+        os.rename(tmp, arrivals)
+    except OSError:
+        shutil.rmtree(tmp, ignore_errors=True)
+    with open(marker, "w") as f:
+        f.write("ok")
+    return arrivals
+
+
+def arrivals_stream(spark: SparkSession, arrivals: str) -> DataFrame:
+    """The staged arrivals as a parquet file stream, one file per
+    micro-batch (schema read from the directory, not from a named file)."""
+    schema = spark.read.parquet(arrivals).schema
     return (
-        os.path.join(root, "arrivals"),
-        os.path.join(root, "store"),
-        os.path.join(root, "checkpoint"),
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .format("parquet")
+        .load(arrivals)
     )
 
 
-def stage_documents_stream(spark: SparkSession, sf_dir: str) -> str:
-    """Split the static documents table into N_STAGE_FILES range-partitioned
-    parquet files so the file source genuinely replays multiple
-    micro-batches (idempotent per corpus version)."""
-    arrivals, _, _ = ingest_dirs(sf_dir)
-    marker = os.path.join(arrivals, "_staged")
-    if not os.path.exists(marker):
-        docs = load_table(spark, sf_dir, "documents")
-        tmp = f"{arrivals}.build.{os.getpid()}"
-        docs.repartitionByRange(N_STAGE_FILES, "doc_id").write.mode(
-            "overwrite"
-        ).parquet(tmp)
-        try:
-            os.rename(tmp, arrivals)
-        except OSError:
-            shutil.rmtree(tmp, ignore_errors=True)
-        with open(marker, "w") as f:
-            f.write("ok")
-    return arrivals
+def replay_into_store(
+    stream: DataFrame,
+    checkpoint: str,
+    write_batch: Callable[[DataFrame, int], None],
+    shuffle_partitions: int | None = None,
+) -> None:
+    """Run ``write_batch(batch_df, batch_id)`` on every available
+    micro-batch of ``stream`` (AvailableNow, the trailing no-data batch
+    included) under ``checkpoint``, so a rerun over processed arrivals is
+    a no-op. ``shuffle_partitions`` sets the session's shuffle partitions
+    (a stateful stream's state-store count, fixed at its first start) for
+    this replay only, restored after it even when a batch fails."""
+    spark = stream.sparkSession
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    if shuffle_partitions is not None:
+        spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
+    try:
+        (
+            stream.writeStream.foreachBatch(write_batch)
+            .option("checkpointLocation", checkpoint)
+            .trigger(availableNow=True)
+            .start()
+            .awaitTermination()
+        )
+    finally:
+        if shuffle_partitions is not None:
+            spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
+def _assert_batch_membership(
+    spark: SparkSession, store: str, expected: Column, what: str
+) -> None:
+    """Fail loudly unless every store row sits in the micro-batch
+    ``expected`` names for it (NULL: any batch). The oracles' batch
+    arithmetic assumes file i is batch i; a file source that reordered
+    arrivals would otherwise show only as a hash mismatch."""
+    bad = (
+        spark.read.option("basePath", store)
+        .parquet(store)
+        .filter(expected != F.col("batch_id").cast("int"))
+        .count()
+    )
+    if bad:
+        raise RuntimeError(f"{what}: {bad} rows landed in the wrong micro-batch")
 
 
 def store_before(spark: SparkSession, store_dir: str, batch_id: int) -> DataFrame | None:
@@ -126,6 +207,28 @@ def store_before(spark: SparkSession, store_dir: str, batch_id: int) -> DataFram
     return spark.read.option("basePath", store_dir).parquet(*parts)
 
 
+def stage_documents_stream(spark: SparkSession, sf_dir: str) -> str:
+    """Split the static documents table into N_STAGE_FILES range-partitioned
+    parquet files so the file source genuinely replays multiple
+    micro-batches (idempotent per corpus version). One write job, not one
+    per file: this staging sits on the benchmarked cold ingest."""
+    arrivals = ingest_dirs(sf_dir).arrivals
+    marker = os.path.join(arrivals, "_staged")
+    if not os.path.exists(marker):
+        docs = load_table(spark, sf_dir, "documents")
+        tmp = f"{arrivals}.build.{os.getpid()}"
+        docs.repartitionByRange(N_STAGE_FILES, "doc_id").write.mode(
+            "overwrite"
+        ).parquet(tmp)
+        try:
+            os.rename(tmp, arrivals)
+        except OSError:
+            shutil.rmtree(tmp, ignore_errors=True)
+        with open(marker, "w") as f:
+            f.write("ok")
+    return arrivals
+
+
 def upsert_batch(batch_df: DataFrame, batch_id: int, store_dir: str) -> None:
     """foreachBatch body: in-batch winners (min doc_id per fingerprint),
     anti-join against the prior store, overwrite ONLY this batch's
@@ -139,34 +242,19 @@ def upsert_batch(batch_df: DataFrame, batch_id: int, store_dir: str) -> None:
     prior = store_before(spark, store_dir, batch_id)
     if prior is not None:
         winners = winners.join(prior.select("fp"), "fp", "left_anti")
-    winners.write.mode("overwrite").parquet(
-        os.path.join(store_dir, f"batch_id={batch_id}")
-    )
+    winners.write.mode("overwrite").parquet(_batch_dir(store_dir, batch_id))
 
 
 def run_dedup_ingest(spark: SparkSession, sf_dir: str) -> str:
-    """Replay the corpus through the streaming dedup ingester (AvailableNow,
-    one staged file per micro-batch) and return the store directory.
-    Re-running against an unchanged corpus is a no-op: the checkpoint
-    remembers processed files and the store is already converged."""
+    """Replay the corpus through the streaming dedup ingester and return
+    the store directory."""
     arrivals, store, checkpoint = ingest_dirs(sf_dir)
     stage_documents_stream(spark, sf_dir)
-    schema = spark.read.parquet(arrivals).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .format("parquet")
-        .load(arrivals)
+    replay_into_store(
+        arrivals_stream(spark, arrivals),
+        checkpoint,
+        lambda df, bid: upsert_batch(df, bid, store),
     )
-    q = (
-        stream.writeStream.foreachBatch(
-            lambda df, bid: upsert_batch(df, bid, store)
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     return store
 
 
@@ -205,56 +293,13 @@ def stream_dedup_ingest_fps(spark: SparkSession, sf_dir: str) -> DataFrame:
 NEAR_N_BATCHES = 4
 
 
-def near_ingest_dirs(sf_dir: str) -> tuple[str, str, str, str, str]:
-    """(arrivals, store, checkpoint, survivors, stop-artifact) dirs for the
-    near-dup ingester — separate trio from the exact ingester's."""
-    base = f"near-{os.path.basename(os.path.normpath(sf_dir))}"
-    tag = f"{base}-{_corpus_fingerprint(sf_dir)}"
-    _prune_stale_tags(base, tag)
-    root = os.path.join(INGEST_ROOT, tag)
-    return (
-        os.path.join(root, "arrivals"),
-        os.path.join(root, "store"),
-        os.path.join(root, "checkpoint"),
-        os.path.join(root, "survivors"),
-        os.path.join(root, "stop_fps"),
-    )
-
-
-def stage_mod_batches(spark: SparkSession, sf_dir: str) -> str:
-    """Stage the corpus as NEAR_N_BATCHES single-file arrivals where file i
-    holds doc_id % N == i, with strictly increasing mtimes AND sorted
-    names, so the file source's (mtime, path) ordering replays them as
-    micro-batches 0..N-1 deterministically — the property the driver
-    oracle's batch arithmetic states."""
-    import glob
-    import time
-
-    arrivals, _, _, _, _ = near_ingest_dirs(sf_dir)
-    marker = os.path.join(arrivals, "_staged")
-    if os.path.exists(marker):
-        return arrivals
+def _mod_classes(spark: SparkSession, sf_dir: str, n: int):
+    """Frame schedule of the modulus-staged families: batch k holds the
+    documents with ``doc_id % n == k``, so batch membership is a pure
+    function of the data the oracles can restate."""
     docs = load_table(spark, sf_dir, "documents")
-    tmp = f"{arrivals}.build.{os.getpid()}"
-    os.makedirs(tmp, exist_ok=True)
-    for i in range(NEAR_N_BATCHES):
-        part_dir = os.path.join(tmp, f"part{i}")
-        docs.filter(F.col("doc_id") % NEAR_N_BATCHES == i).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(part_dir)
-        src = glob.glob(os.path.join(part_dir, "part-*.parquet"))[0]
-        dst = os.path.join(tmp, f"batch-{i}.parquet")
-        os.rename(src, dst)
-        shutil.rmtree(part_dir, ignore_errors=True)
-        t = time.time() + i  # strictly increasing, 1s apart
-        os.utime(dst, (t, t))
-    try:
-        os.rename(tmp, arrivals)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)
-    with open(marker, "w") as f:
-        f.write("ok")
-    return arrivals
+    for k in range(n):
+        yield docs.filter(F.col("doc_id") % n == k)
 
 
 def upsert_near_batch(
@@ -263,9 +308,7 @@ def upsert_near_batch(
     """foreachBatch body: drop batch docs whose discriminative winnowing
     postings are >= CONTAINMENT_THRESHOLD contained in some doc of an
     EARLIER batch (the seen-content store), then append this batch's
-    postings to the store and its survivors to the output — both as
-    batch-owned partition overwrites, so a retried batch rewrites exactly
-    its own output (same exactly-once contract as ``upsert_batch``)."""
+    postings to the store and its survivors to the output."""
     from airflow_ml_pipeline_spark.operators.dedup import (
         containment_dropped_ids,
         winnow_md5_postings,
@@ -291,12 +334,8 @@ def upsert_near_batch(
         )
     # the store records EVERY arrival's postings (seen-content semantics:
     # novelty is judged against all content seen earlier, kept or not)
-    postings.write.mode("overwrite").parquet(
-        os.path.join(store_dir, f"batch_id={batch_id}")
-    )
-    survivors.write.mode("overwrite").parquet(
-        os.path.join(out_dir, f"batch_id={batch_id}")
-    )
+    postings.write.mode("overwrite").parquet(_batch_dir(store_dir, batch_id))
+    survivors.write.mode("overwrite").parquet(_batch_dir(out_dir, batch_id))
 
 
 def run_near_dedup_ingest(spark: SparkSession, sf_dir: str) -> str:
@@ -311,41 +350,25 @@ def run_near_dedup_ingest(spark: SparkSession, sf_dir: str) -> str:
         winnow_md5_postings,
     )
 
-    arrivals, store, checkpoint, survivors, stop_dir = near_ingest_dirs(sf_dir)
-    stage_mod_batches(spark, sf_dir)
+    d = ingest_dirs(sf_dir, "near")
+    survivors, stop_dir = d.aux("survivors"), d.aux("stop_fps")
+    _stage_single_file_batches(
+        d.arrivals, _mod_classes(spark, sf_dir, NEAR_N_BATCHES)
+    )
     if not os.path.isdir(stop_dir):
         docs = load_table(spark, sf_dir, "documents")
         stop_fps(winnow_md5_postings(docs)).write.mode("overwrite").parquet(
             f"{stop_dir}.build"
         )
         os.rename(f"{stop_dir}.build", stop_dir)
-    schema = spark.read.parquet(arrivals).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .format("parquet")
-        .load(arrivals)
+    replay_into_store(
+        arrivals_stream(spark, d.arrivals),
+        d.checkpoint,
+        lambda df, bid: upsert_near_batch(df, bid, d.store, survivors, stop_dir),
     )
-    q = (
-        stream.writeStream.foreachBatch(
-            lambda df, bid: upsert_near_batch(df, bid, store, survivors, stop_dir)
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    _assert_batch_membership(
+        spark, d.store, F.col("doc_id") % NEAR_N_BATCHES, "near-dup ingest"
     )
-    q.awaitTermination()
-    # defensive: the oracle's batch arithmetic assumes file i == batch i;
-    # fail loudly if the source ever reorders arrivals
-    bad = (
-        spark.read.parquet(store)
-        .filter(F.col("doc_id") % NEAR_N_BATCHES != F.col("batch_id"))
-        .count()
-    )
-    if bad:
-        raise RuntimeError(
-            f"near-dup ingest: {bad} postings landed in the wrong micro-batch"
-        )
     return survivors
 
 
@@ -433,54 +456,19 @@ def stream_near_dup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 FUNNEL_N_BATCHES = 4
 
 
-def funnel_dirs(sf_dir: str) -> tuple[str, str, str, str]:
-    """(arrivals, store, stats, checkpoint) for the funnel ingester —
-    separate trio so the range-staged exact ingester is untouched."""
-    base = os.path.basename(os.path.normpath(sf_dir))
-    tag = f"{base}-{_corpus_fingerprint(sf_dir)}"
-    root = os.path.join(INGEST_ROOT, tag)
-    return (
-        os.path.join(root, "funnel_arrivals"),
-        os.path.join(root, "funnel_store"),
-        os.path.join(root, "funnel_stats"),
-        os.path.join(root, "funnel_checkpoint"),
-    )
-
-
 def stage_modulus_stream(spark: SparkSession, sf_dir: str) -> str:
-    """Stage the corpus as FUNNEL_N_BATCHES single-file parquet slices,
-    slice k = docs with ``doc_id % FUNNEL_N_BATCHES == k``, file mtimes
-    strictly ascending in k — the file source processes one file per
-    trigger in (mtime, path) order, so micro-batch k IS modulus class k
-    and every per-batch number becomes oracle-expressible."""
-    arrivals, _, _, _ = funnel_dirs(sf_dir)
-    marker = os.path.join(arrivals, "_staged")
-    if not os.path.exists(marker):
-        docs = load_table(spark, sf_dir, "documents")
-        os.makedirs(arrivals, exist_ok=True)
-        import time
-
-        t0 = time.time() - 3600
-        for k in range(FUNNEL_N_BATCHES):
-            tmp = os.path.join(arrivals, f".build_{k}.{os.getpid()}")
-            docs.filter(
-                F.col("doc_id") % FUNNEL_N_BATCHES == k
-            ).coalesce(1).write.mode("overwrite").parquet(tmp)
-            part = [f for f in os.listdir(tmp) if f.endswith(".parquet")][0]
-            dst = os.path.join(arrivals, f"slice_{k}.parquet")
-            os.rename(os.path.join(tmp, part), dst)
-            os.utime(dst, (t0 + k, t0 + k))
-            shutil.rmtree(tmp, ignore_errors=True)
-        with open(marker, "w") as f:
-            f.write("ok")
-    return arrivals
+    """The funnel family's arrivals (FUNNEL_N_BATCHES modulus classes),
+    replayed by the funnel and the scrub ingesters alike."""
+    return _stage_single_file_batches(
+        ingest_dirs(sf_dir, "funnel").arrivals,
+        _mod_classes(spark, sf_dir, FUNNEL_N_BATCHES),
+    )
 
 
 def funnel_batch(batch_df: DataFrame, batch_id: int, store: str, stats: str) -> None:
     """foreachBatch body: compute the batch's funnel counters, upsert the
-    fingerprint store (same exactly-once layout as ``upsert_batch``:
-    anti-join prior partitions only, overwrite own partition), write the
-    1-row stats partition last so a retried batch regenerates both."""
+    fingerprint store like ``upsert_batch``, and write the 1-row stats
+    partition last so a retried batch regenerates both."""
     from airflow_ml_pipeline_spark.functions.text import (
         STOPWORDS_EN,
         count_in,
@@ -505,46 +493,28 @@ def funnel_batch(batch_df: DataFrame, batch_id: int, store: str, stats: str) -> 
         if prior is not None
         else winners
     )
-    new.write.mode("overwrite").parquet(
-        os.path.join(store, f"batch_id={batch_id}")
-    )
+    new.write.mode("overwrite").parquet(_batch_dir(store, batch_id))
     row = flagged.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_arrivals"),
         F.sum("gate").cast("bigint").alias("n_gate_passed"),
         F.count_distinct("fp").cast("bigint").alias("n_unique_fps"),
     ).crossJoin(
-        spark.read.parquet(os.path.join(store, f"batch_id={batch_id}"))
+        spark.read.parquet(_batch_dir(store, batch_id))
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_new_docs"))
     )
-    row.write.mode("overwrite").parquet(
-        os.path.join(stats, f"batch_id={batch_id}")
-    )
+    row.write.mode("overwrite").parquet(_batch_dir(stats, batch_id))
 
 
 def run_funnel_ingest(spark: SparkSession, sf_dir: str) -> str:
-    """AvailableNow replay of the modulus-staged corpus through the
-    funnel ingester; returns the stats directory. Idempotent per corpus
-    version (checkpointed file progress + per-partition overwrites)."""
-    arrivals, store, stats, checkpoint = funnel_dirs(sf_dir)
-    stage_modulus_stream(spark, sf_dir)
-    schema = spark.read.parquet(
-        os.path.join(arrivals, "slice_0.parquet")
-    ).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .format("parquet")
-        .load(arrivals)
+    """Replay the modulus-staged corpus through the funnel ingester;
+    returns the stats directory."""
+    d = ingest_dirs(sf_dir, "funnel")
+    stats = d.aux("stats")
+    replay_into_store(
+        arrivals_stream(spark, stage_modulus_stream(spark, sf_dir)),
+        d.checkpoint,
+        lambda df, bid: funnel_batch(df, bid, d.store, stats),
     )
-    q = (
-        stream.writeStream.foreachBatch(
-            lambda df, bid: funnel_batch(df, bid, store, stats)
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     return stats
 
 
@@ -613,26 +583,10 @@ def stream_ingest_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 # above is the dedup/observe side). Each micro-batch runs the batch PII
 # kernel (operators/packing.py::pii_counted — stated once for batch,
 # report, and stream), writes the scrubbed docs to its own store
-# partition, and a 1-row stats partition last — same exactly-once layout
-# as the dedup ingester: a retried batch regenerates both, never
-# double-counts. Batch membership is the deterministic doc_id modulus
-# (shared staged arrivals), so every per-batch number is DuckDB-
-# restatable.
+# partition, and a 1-row stats partition last. Batch membership is the
+# funnel's doc_id modulus (its arrivals are replayed here), so every
+# per-batch number is DuckDB-restatable.
 # ---------------------------------------------------------------------------
-
-
-def pii_ingest_dirs(sf_dir: str) -> tuple[str, str, str, str]:
-    """(arrivals, store, stats, checkpoint) for the scrub ingester —
-    arrivals are SHARED with the funnel (same staged slices, separate
-    checkpoint tracks this stream's own progress)."""
-    arrivals, _, _, _ = funnel_dirs(sf_dir)
-    root = os.path.dirname(arrivals)
-    return (
-        arrivals,
-        os.path.join(root, "pii_store"),
-        os.path.join(root, "pii_stats"),
-        os.path.join(root, "pii_checkpoint"),
-    )
 
 
 def pii_scrub_batch(batch_df: DataFrame, batch_id: int, store: str, stats: str) -> None:
@@ -650,45 +604,26 @@ def pii_scrub_batch(batch_df: DataFrame, batch_id: int, store: str, stats: str) 
         "n_ids",
         F.md5(F.regexp_replace("t2", PII_IDNUM, "[ID]")).alias("scrubbed_md5"),
     ).localCheckpoint(eager=True)  # consumed by the store write + stats agg
-    counted.write.mode("overwrite").parquet(
-        os.path.join(store, f"batch_id={batch_id}")
-    )
+    counted.write.mode("overwrite").parquet(_batch_dir(store, batch_id))
     row = counted.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),
         F.sum("n_emails").cast("bigint").alias("n_emails"),
         F.sum("n_phones").cast("bigint").alias("n_phones"),
         F.sum("n_ids").cast("bigint").alias("n_ids"),
     )
-    row.write.mode("overwrite").parquet(
-        os.path.join(stats, f"batch_id={batch_id}")
-    )
+    row.write.mode("overwrite").parquet(_batch_dir(stats, batch_id))
 
 
 def run_pii_scrub_ingest(spark: SparkSession, sf_dir: str) -> str:
-    """AvailableNow replay of the modulus-staged corpus through the
-    scrubbing ingester; returns the stats directory. Idempotent per
-    corpus version (checkpointed file progress + per-partition
-    overwrites)."""
-    arrivals, store, stats, checkpoint = pii_ingest_dirs(sf_dir)
-    stage_modulus_stream(spark, sf_dir)
-    schema = spark.read.parquet(
-        os.path.join(arrivals, "slice_0.parquet")
-    ).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .format("parquet")
-        .load(arrivals)
+    """Replay the funnel's modulus-staged arrivals through the scrubbing
+    ingester; returns the stats directory."""
+    d = ingest_dirs(sf_dir, "pii")
+    stats = d.aux("stats")
+    replay_into_store(
+        arrivals_stream(spark, stage_modulus_stream(spark, sf_dir)),
+        d.checkpoint,
+        lambda df, bid: pii_scrub_batch(df, bid, d.store, stats),
     )
-    q = (
-        stream.writeStream.foreachBatch(
-            lambda df, bid: pii_scrub_batch(df, bid, store, stats)
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     return stats
 
 
@@ -761,109 +696,55 @@ SESSION_WM_US = 1800 * 1000000  # 30-min watermark delay
 # (proof in the query docstring; violated only if delay < gap).
 
 
-def _events_fingerprint(sf_dir: str) -> str:
-    """events.parquet content fingerprint (path + mtime/size), same
-    staleness contract as _corpus_fingerprint / stage_events_dir."""
-    src = os.path.join(os.path.abspath(sf_dir), "events.parquet")
-    h = hashlib.sha256(src.encode())
-    if os.path.isdir(src):
-        for name in sorted(os.listdir(src)):
-            st = os.stat(os.path.join(src, name))
-            h.update(f"{name}:{st.st_mtime_ns}:{st.st_size};".encode())
-    elif os.path.exists(src):
-        st = os.stat(src)
-        h.update(f"{st.st_mtime_ns}:{st.st_size};".encode())
-    return h.hexdigest()[:16]
-
-
-def session_timing_dirs(sf_dir: str) -> tuple[str, str, str]:
-    """(arrivals, store, checkpoint) for the eviction-timing replay."""
-    base = os.path.basename(os.path.normpath(sf_dir))
-    tag = f"{base}-{_events_fingerprint(sf_dir)}"
-    root = os.path.join(INGEST_ROOT, tag)
-    return (
-        os.path.join(root, "session_arrivals"),
-        os.path.join(root, "session_store"),
-        os.path.join(root, "session_checkpoint"),
+def _time_sliced(spark: SparkSession, sf_dir: str, n: int) -> DataFrame:
+    """events with ``slice`` = k for the k-th of n event-time ranges,
+    ``(unix_micros(ts) - min) * n div (max - min + 1)`` (integer
+    arithmetic, engine-exact; one min/max job)."""
+    ev = load_table(spark, sf_dir, "events")
+    mn, mx = ev.agg(F.min(F.unix_micros("ts")), F.max(F.unix_micros("ts"))).first()
+    return ev.withColumn(
+        "slice", F.expr(f"(unix_micros(ts) - {mn}) * {n} div {mx - mn + 1}")
     )
+
+
+def _time_slices(spark: SparkSession, sf_dir: str):
+    """Frame schedule of the session family: batch k is event-time range
+    k of SESSION_N_SLICES, so the per-batch watermark is a pure function
+    of the slice maxima."""
+    sliced = _time_sliced(spark, sf_dir, SESSION_N_SLICES)
+    for k in range(SESSION_N_SLICES):
+        yield sliced.filter(F.col("slice") == k).drop("slice")
 
 
 def stage_time_slices(spark: SparkSession, sf_dir: str) -> str:
-    """Stage events as SESSION_N_SLICES single-file parquet slices in
-    EVENT-TIME order: slice k = events with
-    ``(unix_micros(ts) - min) * K div (max - min + 1) == k`` (integer
-    arithmetic, engine-exact), file mtimes ascending in k — so
-    micro-batch k IS time-range k and the per-batch watermark becomes a
-    pure function of the slice maxima."""
-    arrivals, _, _ = session_timing_dirs(sf_dir)
-    marker = os.path.join(arrivals, "_staged")
-    if not os.path.exists(marker):
-        ev = load_table(spark, sf_dir, "events")
-        mn, mx = ev.agg(
-            F.min(F.unix_micros("ts")), F.max(F.unix_micros("ts"))
-        ).first()
-        span = mx - mn + 1
-        os.makedirs(arrivals, exist_ok=True)
-        import time
-
-        t0 = time.time() - 3600
-        for k in range(SESSION_N_SLICES):
-            tmp = os.path.join(arrivals, f".build_{k}.{os.getpid()}")
-            ev.filter(
-                F.expr(
-                    f"(unix_micros(ts) - {mn}) * {SESSION_N_SLICES}"
-                    f" div {span}"
-                )
-                == k
-            ).coalesce(1).write.mode("overwrite").parquet(tmp)
-            part = [f for f in os.listdir(tmp) if f.endswith(".parquet")][0]
-            dst = os.path.join(arrivals, f"slice_{k}.parquet")
-            os.rename(os.path.join(tmp, part), dst)
-            os.utime(dst, (t0 + k, t0 + k))
-            shutil.rmtree(tmp, ignore_errors=True)
-        with open(marker, "w") as f:
-            f.write("ok")
-    return arrivals
-
-
-def run_session_timing(spark: SparkSession, sf_dir: str) -> str:
-    """AvailableNow replay of the time-sliced events through an
-    append-mode session_window aggregation (30-min gap, 30-min
-    watermark); each batch's EMITTED sessions land in the store
-    partition ``batch_id=N`` (exactly-once: a retried batch overwrites
-    its own partition). The trailing no-data batch is NOT skipped — it
-    carries the final watermark advance and flushes the last decided
-    sessions."""
-    from airflow_ml_pipeline_spark.streaming.windows import session_aggregate
-
-    arrivals, store, checkpoint = session_timing_dirs(sf_dir)
-    stage_time_slices(spark, sf_dir)
-    schema = spark.read.parquet(os.path.join(arrivals, "slice_0.parquet")).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .format("parquet")
-        .load(arrivals)
+    """The session family's arrivals, replayed by the session, tumbling
+    and stateful timing streams alike."""
+    return _stage_single_file_batches(
+        ingest_dirs(sf_dir, "session", "events").arrivals,
+        _time_slices(spark, sf_dir),
     )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        agg = session_aggregate(stream, "30 minutes", "30 minutes")
-        q = (
-            agg.writeStream.foreachBatch(
-                lambda df, bid: df.write.mode("overwrite").parquet(
-                    os.path.join(store, f"batch_id={bid}")
-                )
-            )
-            .outputMode("append")
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return store
+
+
+def _replay_timing(
+    spark: SparkSession,
+    sf_dir: str,
+    family: str,
+    arrivals: str,
+    transform: Callable[[DataFrame], DataFrame],
+) -> DataFrame:
+    """Replay ``arrivals`` through the append-mode stateful ``transform``
+    into ``family``'s store — each batch's EMITTED rows land in its own
+    ``batch_id=N`` partition — and read the store back. The trailing
+    no-data batch is kept: it carries the final watermark advance. Eight
+    state-store partitions (results do not depend on the count)."""
+    _, store, checkpoint = ingest_dirs(sf_dir, family, "events")
+    replay_into_store(
+        transform(arrivals_stream(spark, arrivals)),
+        checkpoint,
+        lambda df, bid: df.write.mode("overwrite").parquet(_batch_dir(store, bid)),
+        shuffle_partitions=8,
+    )
+    return spark.read.option("basePath", store).parquet(store)
 
 
 def _session_timing_oracle() -> str:
@@ -962,70 +843,22 @@ def stream_session_eviction_timing(spark: SparkSession, sf_dir: str) -> DataFram
     the one-time replay cost is the first call's (~9 s at sf0.1,
     dominated by per-micro-batch state-store commits, constant in
     corpus size at fixed slice count)."""
-    store = run_session_timing(spark, sf_dir)
-    return (
-        spark.read.option("basePath", store)
-        .parquet(store)
-        .select(
-            "user_id",
-            "session_start",
-            "n_events",
-            "session_value",
-            F.col("batch_id").cast("bigint").alias("emitted_batch"),
-        )
+    from airflow_ml_pipeline_spark.streaming.windows import session_aggregate
+
+    emitted = _replay_timing(
+        spark,
+        sf_dir,
+        "session",
+        stage_time_slices(spark, sf_dir),
+        lambda s: session_aggregate(s, "30 minutes", "30 minutes"),
     )
-
-
-def tumbling_timing_dirs(sf_dir: str) -> tuple[str, str, str]:
-    """(arrivals, store, checkpoint) for the tumbling-window eviction
-    replay — arrivals SHARED with the session-timing stream (same
-    time-ordered slices; separate checkpoint tracks this stream's own
-    progress, the funnel/pii-arrivals pattern)."""
-    arrivals, _, _ = session_timing_dirs(sf_dir)
-    root = os.path.dirname(arrivals)
-    return (
-        arrivals,
-        os.path.join(root, "tumbling_store"),
-        os.path.join(root, "tumbling_checkpoint"),
+    return emitted.select(
+        "user_id",
+        "session_start",
+        "n_events",
+        "session_value",
+        F.col("batch_id").cast("bigint").alias("emitted_batch"),
     )
-
-
-def run_tumbling_timing(spark: SparkSession, sf_dir: str) -> str:
-    """AvailableNow replay of the time-sliced events through an
-    append-mode 1-hour tumbling aggregation (30-min watermark); each
-    batch's EMITTED windows land in ``batch_id=N`` store partitions.
-    The trailing no-data batch is NOT skipped (it flushes the windows
-    the final watermark advance decides)."""
-    from airflow_ml_pipeline_spark.streaming.windows import tumbling_counts
-
-    arrivals, store, checkpoint = tumbling_timing_dirs(sf_dir)
-    stage_time_slices(spark, sf_dir)
-    schema = spark.read.parquet(os.path.join(arrivals, "slice_0.parquet")).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .format("parquet")
-        .load(arrivals)
-    )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        agg = tumbling_counts(stream, window="1 hour", watermark="30 minutes")
-        q = (
-            agg.writeStream.foreachBatch(
-                lambda df, bid: df.write.mode("overwrite").parquet(
-                    os.path.join(store, f"batch_id={bid}")
-                )
-            )
-            .outputMode("append")
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return store
 
 
 def _tumbling_timing_oracle() -> str:
@@ -1088,69 +921,22 @@ def stream_tumbling_eviction_timing(spark: SparkSession, sf_dir: str) -> DataFra
     TIMING column is streaming-specific. Arrivals are shared with the
     session stream; this query's own checkpoint/store keep exactly-once
     per-partition semantics."""
-    store = run_tumbling_timing(spark, sf_dir)
-    return (
-        spark.read.option("basePath", store)
-        .parquet(store)
-        .select(
-            "window_start",
-            "event_type",
-            "n_events",
-            "total_value",
-            F.col("batch_id").cast("bigint").alias("emitted_batch"),
-        )
+    from airflow_ml_pipeline_spark.streaming.windows import tumbling_counts
+
+    emitted = _replay_timing(
+        spark,
+        sf_dir,
+        "tumbling",
+        stage_time_slices(spark, sf_dir),
+        lambda s: tumbling_counts(s, window="1 hour", watermark="30 minutes"),
     )
-
-
-def stateful_timing_dirs(sf_dir: str) -> tuple[str, str, str]:
-    """(arrivals, store, checkpoint) for the custom-state eviction replay
-    — arrivals SHARED with the session/tumbling timing streams."""
-    arrivals, _, _ = session_timing_dirs(sf_dir)
-    root = os.path.dirname(arrivals)
-    return (
-        arrivals,
-        os.path.join(root, "stateful_store"),
-        os.path.join(root, "stateful_checkpoint"),
+    return emitted.select(
+        "window_start",
+        "event_type",
+        "n_events",
+        "total_value",
+        F.col("batch_id").cast("bigint").alias("emitted_batch"),
     )
-
-
-def run_stateful_timing(spark: SparkSession, sf_dir: str) -> str:
-    """AvailableNow replay of the time-sliced events through the
-    applyInPandasWithState gap sessionizer (EventTimeTimeout); each
-    batch's EMITTED sessions land in ``batch_id=N`` store partitions.
-    The trailing no-data batch is NOT skipped — it carries the final
-    watermark advance, and the last decided sessions fire as TIMEOUTS
-    there (the timer path, not the data path)."""
-    from airflow_ml_pipeline_spark.streaming.stateful import gap_sessions
-
-    arrivals, store, checkpoint = stateful_timing_dirs(sf_dir)
-    stage_time_slices(spark, sf_dir)
-    schema = spark.read.parquet(os.path.join(arrivals, "slice_0.parquet")).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .format("parquet")
-        .load(arrivals)
-    )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        sess = gap_sessions(stream)
-        q = (
-            sess.writeStream.foreachBatch(
-                lambda df, bid: df.write.mode("overwrite").parquet(
-                    os.path.join(store, f"batch_id={bid}")
-                )
-            )
-            .outputMode("append")
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return store
 
 
 def _stateful_timing_oracle() -> str:
@@ -1259,17 +1045,17 @@ def stream_stateful_eviction_timing(spark: SparkSession, sf_dir: str) -> DataFra
     lattice as a state STRING, so cross-engine equality survives any
     batch slicing. Store/bench convention as the rest of the timing
     family (idempotent per-corpus store; first call pays the replay)."""
-    store = run_stateful_timing(spark, sf_dir)
-    return (
-        spark.read.option("basePath", store)
-        .parquet(store)
-        .select(
-            "user_id",
-            "session_start_us",
-            "n_events",
-            "session_value",
-            F.col("batch_id").cast("bigint").alias("emitted_batch"),
-        )
+    from airflow_ml_pipeline_spark.streaming.stateful import gap_sessions
+
+    emitted = _replay_timing(
+        spark, sf_dir, "stateful", stage_time_slices(spark, sf_dir), gap_sessions
+    )
+    return emitted.select(
+        "user_id",
+        "session_start_us",
+        "n_events",
+        "session_value",
+        F.col("batch_id").cast("bigint").alias("emitted_batch"),
     )
 
 
@@ -1285,116 +1071,36 @@ DEDUP_WM_MS = 36 * 3600 * 1000  # 36-hour dedup horizon (vs 7.5-day slices)
 DEDUP_WM_US = DEDUP_WM_MS * 1000
 
 
-def dedup_timing_dirs(sf_dir: str) -> tuple[str, str, str]:
-    """(arrivals, store, checkpoint) for the dedup-eviction replay.
-    Arrivals are NOT shared with the session slices: the dedup operator's
-    within-batch winner among same-key rows follows Spark's partition
-    processing order (genuinely nondeterministic), so the fixture stages
-    its own slices pre-reduced to one row per (key, slice)."""
-    arrivals, _, _ = session_timing_dirs(sf_dir)
-    root = os.path.dirname(arrivals)
-    return (
-        os.path.join(root, "dedup_timing_arrivals"),
-        os.path.join(root, "dedup_timing_store"),
-        os.path.join(root, "dedup_timing_checkpoint"),
+def _dedup_slices(spark: SparkSession, sf_dir: str):
+    """Frame schedule of the dedup-timing family: DEDUP_N_SLICES
+    event-time ranges (the ``_time_sliced`` arithmetic), REDUCED to the
+    min-(ts, event_id) row per (user_id, event_type, slice). The reduction
+    is what makes the replay deterministic: dropDuplicatesWithinWatermark
+    keeps the first-PROCESSED row of a key within a micro-batch (partition
+    order — not restatable), so the fixture guarantees each key arrives at
+    most once per batch and every emission's ts is pinned. Its own
+    arrivals, not the session slices'. Every slice must be non-empty:
+    batch numbering = slice numbering."""
+    from pyspark.sql import Window
+
+    w = Window.partitionBy("user_id", "event_type", "slice").orderBy(
+        "ts", "event_id"
     )
-
-
-def stage_dedup_slices(spark: SparkSession, sf_dir: str) -> str:
-    """Stage events as DEDUP_N_SLICES single-file parquet slices in
-    EVENT-TIME order (slice k = integer time-range k, the
-    stage_time_slices arithmetic), REDUCED to the min-(ts, event_id) row
-    per (user_id, event_type, slice). The reduction is what makes the
-    replay deterministic: dropDuplicatesWithinWatermark keeps the
-    first-PROCESSED row of a key within a micro-batch (partition order —
-    not restatable), so the fixture guarantees each key arrives at most
-    once per batch and every emission's ts is pinned."""
-    arrivals, _, _ = dedup_timing_dirs(sf_dir)
-    marker = os.path.join(arrivals, "_staged")
-    if not os.path.exists(marker):
-        from pyspark.sql import Window
-
-        ev = load_table(spark, sf_dir, "events")
-        mn, mx = ev.agg(
-            F.min(F.unix_micros("ts")), F.max(F.unix_micros("ts"))
-        ).first()
-        span = mx - mn + 1
-        sliced = ev.withColumn(
-            "slice",
-            F.expr(
-                f"(unix_micros(ts) - {mn}) * {DEDUP_N_SLICES} div {span}"
-            ),
-        )
-        w = Window.partitionBy("user_id", "event_type", "slice").orderBy(
-            "ts", "event_id"
-        )
-        staged = (
-            sliced.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .select("user_id", "event_type", "event_id", "ts", "slice")
-        )
-        os.makedirs(arrivals, exist_ok=True)
-        import time
-
-        t0 = time.time() - 3600
-        for k in range(DEDUP_N_SLICES):
-            tmp = os.path.join(arrivals, f".build_{k}.{os.getpid()}")
-            part_df = staged.filter(F.col("slice") == k).drop("slice")
-            if part_df.limit(1).count() == 0:
-                # batch numbering = slice numbering requires every slice
-                # to exist; an empty time-range means the corpus changed
-                raise ValueError(
-                    f"dedup-timing slice {k} of {DEDUP_N_SLICES} is empty "
-                    f"for {sf_dir} — oracle batch mapping would shift"
-                )
-            part_df.coalesce(1).write.mode("overwrite").parquet(tmp)
-            part = [f for f in os.listdir(tmp) if f.endswith(".parquet")][0]
-            dst = os.path.join(arrivals, f"slice_{k}.parquet")
-            os.rename(os.path.join(tmp, part), dst)
-            os.utime(dst, (t0 + k, t0 + k))
-            shutil.rmtree(tmp, ignore_errors=True)
-        with open(marker, "w") as f:
-            f.write("ok")
-    return arrivals
-
-
-def run_dedup_timing(spark: SparkSession, sf_dir: str) -> str:
-    """AvailableNow replay of the staged per-key-slice arrivals through
-    ``dropDuplicatesWithinWatermark(["user_id", "event_type"])`` with a
-    36-hour watermark; each batch's EMITTED (first-seen or re-admitted)
-    rows land in ``batch_id=N`` store partitions. The trailing no-data
-    batch is kept for uniformity with the timing family — dedup emits
-    only on arrival, so it writes an empty partition."""
-    arrivals, store, checkpoint = dedup_timing_dirs(sf_dir)
-    stage_dedup_slices(spark, sf_dir)
-    schema = spark.read.parquet(os.path.join(arrivals, "slice_0.parquet")).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .format("parquet")
-        .load(arrivals)
+    staged = (
+        _time_sliced(spark, sf_dir, DEDUP_N_SLICES)
+        .withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") == 1)
+        .select("user_id", "event_type", "event_id", "ts", "slice")
     )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        deduped = stream.withWatermark(
-            "ts", "36 hours"
-        ).dropDuplicatesWithinWatermark(["user_id", "event_type"])
-        q = (
-            deduped.writeStream.foreachBatch(
-                lambda df, bid: df.write.mode("overwrite").parquet(
-                    os.path.join(store, f"batch_id={bid}")
-                )
-            )
-            .outputMode("append")
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
+    present = {r.slice for r in staged.select("slice").distinct().collect()}
+    if present != set(range(DEDUP_N_SLICES)):
+        raise ValueError(
+            f"dedup-timing slices {sorted(set(range(DEDUP_N_SLICES)) - present)}"
+            f" of {DEDUP_N_SLICES} are empty for {sf_dir} — oracle batch"
+            " mapping would shift"
         )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return store
+    for k in range(DEDUP_N_SLICES):
+        yield staged.filter(F.col("slice") == k).drop("slice")
 
 
 def _dedup_timing_oracle() -> str:
@@ -1462,7 +1168,7 @@ def stream_dedup_eviction_timing(spark: SparkSession, sf_dir: str) -> DataFrame:
     a key, not just which rows are duplicates: every emission (first-seen
     or re-admitted-after-eviction) is stored with the micro-batch it
     emitted in, over deterministic time-ordered arrivals (one row per
-    (user_id, event_type) per slice — see stage_dedup_slices for why the
+    (user_id, event_type) per slice — see _dedup_slices for why the
     within-batch winner must be pre-reduced).
 
     The eviction rule, pinned by a controlled-slice probe on THIS Spark
@@ -1498,17 +1204,25 @@ def stream_dedup_eviction_timing(spark: SparkSession, sf_dir: str) -> DataFrame:
     within the horizon, GC'd by the watermark; nothing here grows with
     corpus size beyond live-key cardinality. Store/bench convention as
     the rest of the timing family (idempotent per-corpus store)."""
-    store = run_dedup_timing(spark, sf_dir)
-    return (
-        spark.read.option("basePath", store)
-        .parquet(store)
-        .select(
-            "user_id",
-            "event_type",
-            "event_id",
-            F.unix_micros("ts").alias("ts_us"),
-            F.col("batch_id").cast("bigint").alias("emitted_batch"),
-        )
+    arrivals = _stage_single_file_batches(
+        ingest_dirs(sf_dir, "ddww", "events").arrivals,
+        _dedup_slices(spark, sf_dir),
+    )
+    emitted = _replay_timing(
+        spark,
+        sf_dir,
+        "ddww",
+        arrivals,
+        lambda s: s.withWatermark("ts", "36 hours").dropDuplicatesWithinWatermark(
+            ["user_id", "event_type"]
+        ),
+    )
+    return emitted.select(
+        "user_id",
+        "event_type",
+        "event_id",
+        F.unix_micros("ts").alias("ts_us"),
+        F.col("batch_id").cast("bigint").alias("emitted_batch"),
     )
 
 
@@ -1526,57 +1240,21 @@ def stream_dedup_eviction_timing(spark: SparkSession, sf_dir: str) -> DataFrame:
 SEM_N_BATCHES = 4
 
 
-def sem_ingest_dirs(sf_dir: str) -> tuple[str, str, str, str]:
-    """(arrivals, store, checkpoint, survivors) for the semantic-dedup
-    ingester. Tagged by the EMBEDDINGS corpus fingerprint (this family
-    streams vectors, not documents)."""
-    from airflow_ml_pipeline_spark.operators.similarity import (
-        _embeddings_fingerprint,
-    )
-
-    base = f"sem-{os.path.basename(os.path.normpath(sf_dir))}"
-    tag = f"{base}-{_embeddings_fingerprint(sf_dir)}"
-    _prune_stale_tags(base, tag)
-    root = os.path.join(INGEST_ROOT, tag)
-    return (
-        os.path.join(root, "arrivals"),
-        os.path.join(root, "store"),
-        os.path.join(root, "checkpoint"),
-        os.path.join(root, "survivors"),
-    )
+def _vec_range(n: int, n_total: int) -> Column:
+    """Contiguous vec_id range index: ``vec_id * n // n_total``."""
+    return (F.col("vec_id") * n / F.lit(n_total)).cast("int")
 
 
-def stage_range_vec_batches(
-    spark: SparkSession, sf_dir: str, arrivals: str | None = None
-) -> str:
-    """Stage the embeddings as SEM_N_BATCHES single-file arrivals where
-    file i holds ``vec_id * N // n_total == i`` (contiguous vec_id
-    RANGES, mtimes strictly ascending, names sorted) — RANGE staging,
-    not the modulus staging of the near-dup ingester, deliberately:
-    earlier batch then implies LOWER vec_id, which makes the streaming
-    suppressed-set EQUAL the batch twin's keep-priority rule
-    (nn_id < vec_id) exactly — the metamorphic convergence pin
-    tests/test_stream_semantic.py asserts. ``arrivals`` overrides the
-    destination (the PQ encode ingester stages the same ranges under
-    its own root)."""
-    import glob
-    import time
-
-    if arrivals is None:
-        arrivals, _, _, _ = sem_ingest_dirs(sf_dir)
-    marker = os.path.join(arrivals, "_staged")
-    if os.path.exists(marker):
-        return arrivals
-    emb = load_table(spark, sf_dir, "embeddings")
+def _dense_count(emb: DataFrame) -> int:
+    """Row count of the embeddings, after the range-staging completeness
+    guard (ADVICE r13): batch index = vec_id * N // n_total lands in
+    [0, N) iff vec_id is in [0, n_total) — a non-dense corpus with any
+    vec_id outside that range would silently stage NOTHING for that
+    vector and only surface later as an oracle mismatch. NULL vec_ids
+    are the same silent-drop class (both range predicates evaluate to
+    NULL, and the batch expression maps them to no file) — the isNull
+    arm catches them (r14 review finding)."""
     n_total = emb.count()
-    # Completeness guard (ADVICE r13): batch index = vec_id * N // n_total
-    # lands in [0, N) iff vec_id is in [0, n_total) — a non-dense corpus
-    # with any vec_id outside that range would silently stage NOTHING for
-    # that vector and only surface later as an oracle mismatch. Fail
-    # loudly at staging time instead. NULL vec_ids are the same silent-
-    # drop class (both range predicates evaluate to NULL, and the batch
-    # expression maps them to no file) — the isNull arm catches them
-    # (r14 review finding).
     oob = emb.filter(
         F.col("vec_id").isNull()
         | (F.col("vec_id") < 0)
@@ -1584,30 +1262,37 @@ def stage_range_vec_batches(
     ).count()
     if oob:
         raise RuntimeError(
-            f"semantic ingest staging: {oob} vec_ids outside [0, {n_total})"
+            f"vector range staging: {oob} vec_ids outside [0, {n_total})"
             " — range staging requires dense 0..n-1 vec_ids"
         )
-    tmp = f"{arrivals}.build.{os.getpid()}"
-    os.makedirs(tmp, exist_ok=True)
+    return n_total
+
+
+def _vec_ranges(spark: SparkSession, sf_dir: str):
+    """Frame schedule of the vector families: batch i holds the vec_id
+    RANGE ``vec_id * SEM_N_BATCHES // n_total == i``."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    n_total = _dense_count(emb)
     for i in range(SEM_N_BATCHES):
-        part_dir = os.path.join(tmp, f"part{i}")
-        emb.filter(
-            (F.col("vec_id") * SEM_N_BATCHES / F.lit(n_total)).cast("int")
-            == i
-        ).coalesce(1).write.mode("overwrite").parquet(part_dir)
-        src = glob.glob(os.path.join(part_dir, "part-*.parquet"))[0]
-        dst = os.path.join(tmp, f"batch-{i}.parquet")
-        os.rename(src, dst)
-        shutil.rmtree(part_dir, ignore_errors=True)
-        t = time.time() + i  # strictly increasing, 1s apart
-        os.utime(dst, (t, t))
-    try:
-        os.rename(tmp, arrivals)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)
-    with open(marker, "w") as f:
-        f.write("ok")
-    return arrivals
+        yield emb.filter(_vec_range(SEM_N_BATCHES, n_total) == i)
+
+
+def stage_range_vec_batches(
+    spark: SparkSession, sf_dir: str, arrivals: str | None = None
+) -> str:
+    """Stage the embeddings as SEM_N_BATCHES single-file arrivals where
+    file i holds ``vec_id * N // n_total == i`` (contiguous vec_id
+    RANGES) — RANGE staging, not the modulus staging of the near-dup
+    ingester, deliberately: earlier batch then implies LOWER vec_id,
+    which makes the streaming suppressed-set EQUAL the batch twin's
+    keep-priority rule (nn_id < vec_id) exactly — the metamorphic
+    convergence pin tests/test_stream_semantic.py asserts. ``arrivals``
+    overrides the destination (the PQ encode ingester stages the same
+    ranges under its own root)."""
+    return _stage_single_file_batches(
+        arrivals or ingest_dirs(sf_dir, "sem", "embeddings").arrivals,
+        _vec_ranges(spark, sf_dir),
+    )
 
 
 def upsert_sem_batch(
@@ -1618,9 +1303,7 @@ def upsert_sem_batch(
     vector (an earlier batch's store row OR a lower-id row of this same
     batch) scores rounded-cosine >= SDD_TAU against it, then append
     this batch's bucket rows to the seen store and its survivors to the
-    output — batch-owned partition overwrites, so a retried batch
-    rewrites exactly its own output (the module's exactly-once
-    contract). The store records EVERY arrival (seen-content semantics,
+    output. The store records EVERY arrival (seen-content semantics,
     like the near-dup ingester: novelty is judged against all content
     seen earlier, kept or not — exactly the batch twin's rule, which
     compares against pruned vectors too)."""
@@ -1666,50 +1349,25 @@ def upsert_sem_batch(
     )
     b.select("vec_id", "bucket", "embedding", "nrm").write.mode(
         "overwrite"
-    ).parquet(os.path.join(store_dir, f"batch_id={batch_id}"))
-    survivors.write.mode("overwrite").parquet(
-        os.path.join(out_dir, f"batch_id={batch_id}")
-    )
+    ).parquet(_batch_dir(store_dir, batch_id))
+    survivors.write.mode("overwrite").parquet(_batch_dir(out_dir, batch_id))
 
 
 def run_sem_dedup_ingest(spark: SparkSession, sf_dir: str) -> str:
     """Replay the embeddings corpus through the streaming semantic-dedup
-    ingester (AvailableNow, one staged file per micro-batch) and return
-    the survivors directory. Idempotent per corpus version."""
-    arrivals, store, checkpoint, survivors = sem_ingest_dirs(sf_dir)
+    ingester and return the survivors directory."""
+    d = ingest_dirs(sf_dir, "sem", "embeddings")
+    survivors = d.aux("survivors")
     stage_range_vec_batches(spark, sf_dir)
-    schema = spark.read.parquet(arrivals).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .format("parquet")
-        .load(arrivals)
+    replay_into_store(
+        arrivals_stream(spark, d.arrivals),
+        d.checkpoint,
+        lambda df, bid: upsert_sem_batch(df, bid, d.store, survivors),
     )
-    q = (
-        stream.writeStream.foreachBatch(
-            lambda df, bid: upsert_sem_batch(df, bid, store, survivors)
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    # defensive: the oracle's batch arithmetic assumes file i == batch i;
-    # fail loudly if the source ever reorders arrivals
     n_total = load_table(spark, sf_dir, "embeddings").count()
-    bad = (
-        spark.read.option("basePath", store)
-        .parquet(store)
-        .filter(
-            (F.col("vec_id") * SEM_N_BATCHES / F.lit(n_total)).cast("int")
-            != F.col("batch_id")
-        )
-        .count()
+    _assert_batch_membership(
+        spark, d.store, _vec_range(SEM_N_BATCHES, n_total), "semantic ingest"
     )
-    if bad:
-        raise RuntimeError(
-            f"semantic ingest: {bad} vectors landed in the wrong micro-batch"
-        )
     return survivors
 
 
@@ -1809,38 +1467,14 @@ def stream_semantic_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def pqe_ingest_dirs(sf_dir: str) -> tuple[str, str, str]:
-    """(arrivals, store, checkpoint) for the PQ encode ingester. Tagged
-    by the embeddings corpus fingerprint (streams vectors, like the
-    semantic-dedup family). The arrivals are a second staging of the
-    same ranges the semantic-dedup family stages — deliberately NOT
-    shared (r14 review): each family's checkpoint records its own
-    source path, so sharing would couple their replay lifecycles for
-    the price of a few MB of one-time staging on these corpora."""
-    from airflow_ml_pipeline_spark.operators.similarity import (
-        _embeddings_fingerprint,
-    )
-
-    base = f"pqe-{os.path.basename(os.path.normpath(sf_dir))}"
-    tag = f"{base}-{_embeddings_fingerprint(sf_dir)}"
-    _prune_stale_tags(base, tag)
-    root = os.path.join(INGEST_ROOT, tag)
-    return (
-        os.path.join(root, "arrivals"),
-        os.path.join(root, "store"),
-        os.path.join(root, "checkpoint"),
-    )
-
-
 def upsert_pq_batch(batch_df: DataFrame, batch_id: int, store_dir: str) -> None:
     """foreachBatch body: encode the arriving vectors against the frozen
     coarse centroids + PQ codebooks and append the index columns
     (cluster_id, pq_code, vnorm) to the coded store. ENCODING IS
     STATELESS (each vector's code depends only on itself and the frozen
     artifacts), so exactly-once needs no seen-store: a retried batch
-    rewrites exactly its own ``batch_id={{n}}`` partition (the module's
-    batch-owned-overwrite contract) and the store is idempotent under
-    replay. This is the production at-ingest shape: the raw float
+    rewrites exactly its own ``batch_id={{n}}`` partition and the store
+    is idempotent under replay. This is the production at-ingest shape: the raw float
     vectors are read ONCE as they arrive; queries thereafter touch only
     the ~12 B/vector code columns."""
     from airflow_ml_pipeline_spark.operators.pq import pq_index
@@ -1848,49 +1482,27 @@ def upsert_pq_batch(batch_df: DataFrame, batch_id: int, store_dir: str) -> None:
     coded = pq_index(batch_df).select(
         "vec_id", "label", "cluster_id", "pq_code", "vnorm"
     )
-    coded.write.mode("overwrite").parquet(
-        os.path.join(store_dir, f"batch_id={batch_id}")
-    )
+    coded.write.mode("overwrite").parquet(_batch_dir(store_dir, batch_id))
 
 
 def run_pq_encode_ingest(spark: SparkSession, sf_dir: str) -> str:
-    """Replay the embeddings corpus through the streaming PQ encoder
-    (AvailableNow, one staged file per micro-batch) and return the
-    coded-store directory. Idempotent per corpus version."""
-    arrivals, store, checkpoint = pqe_ingest_dirs(sf_dir)
+    """Replay the embeddings corpus through the streaming PQ encoder and
+    return the coded-store directory. Its arrivals are a second staging
+    of the semantic family's ranges — deliberately NOT shared (r14
+    review): each family's checkpoint records its own source path, so
+    sharing would couple their replay lifecycles for the price of a few
+    MB of one-time staging."""
+    arrivals, store, checkpoint = ingest_dirs(sf_dir, "pqe", "embeddings")
     stage_range_vec_batches(spark, sf_dir, arrivals=arrivals)
-    schema = spark.read.parquet(arrivals).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .format("parquet")
-        .load(arrivals)
+    replay_into_store(
+        arrivals_stream(spark, arrivals),
+        checkpoint,
+        lambda df, bid: upsert_pq_batch(df, bid, store),
     )
-    q = (
-        stream.writeStream.foreachBatch(
-            lambda df, bid: upsert_pq_batch(df, bid, store)
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    # defensive: the oracle's batch arithmetic assumes file i == batch i;
-    # fail loudly if the source ever reorders arrivals
     n_total = load_table(spark, sf_dir, "embeddings").count()
-    bad = (
-        spark.read.option("basePath", store)
-        .parquet(store)
-        .filter(
-            (F.col("vec_id") * SEM_N_BATCHES / F.lit(n_total)).cast("int")
-            != F.col("batch_id")
-        )
-        .count()
+    _assert_batch_membership(
+        spark, store, _vec_range(SEM_N_BATCHES, n_total), "pq encode ingest"
     )
-    if bad:
-        raise RuntimeError(
-            f"pq encode ingest: {bad} vectors landed in the wrong micro-batch"
-        )
     return store
 
 
@@ -1989,39 +1601,6 @@ DEL_ADD_CASE = (
 )
 
 
-def _stage_single_file_batches(arrivals: str, batches) -> str:
-    """Write each frame in ``batches`` as ONE parquet file
-    ``batch-i.parquet`` with strictly increasing mtimes AND sorted
-    names, so the file source's (mtime, path) ordering replays them as
-    micro-batches 0..N-1 deterministically (idempotent: the ``_staged``
-    marker short-circuits). The shared staging loop of the delete
-    ingesters (r15 review: previously duplicated per stager)."""
-    import glob
-    import time
-
-    marker = os.path.join(arrivals, "_staged")
-    if os.path.exists(marker):
-        return arrivals
-    tmp = f"{arrivals}.build.{os.getpid()}"
-    os.makedirs(tmp, exist_ok=True)
-    for i, b in enumerate(batches):
-        part_dir = os.path.join(tmp, f"part{i}")
-        b.coalesce(1).write.mode("overwrite").parquet(part_dir)
-        src = glob.glob(os.path.join(part_dir, "part-*.parquet"))[0]
-        dst = os.path.join(tmp, f"batch-{i}.parquet")
-        os.rename(src, dst)
-        shutil.rmtree(part_dir, ignore_errors=True)
-        t = time.time() + i
-        os.utime(dst, (t, t))
-    try:
-        os.rename(tmp, arrivals)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)
-    with open(marker, "w") as f:
-        f.write("ok")
-    return arrivals
-
-
 def _latest_events(store_df: DataFrame, key: str, payload: list[str]) -> DataFrame:
     """Per-key MAX-RANK event of a tombstone event log: rank =
     batch_id * 2 + is-delete — later batches outrank earlier ones, a
@@ -2055,32 +1634,16 @@ def _latest_events(store_df: DataFrame, key: str, payload: list[str]) -> DataFra
     )
 
 
-def delete_ingest_dirs(sf_dir: str) -> tuple[str, str, str]:
-    """(arrivals, store, checkpoint) for the delete-ingest lifecycle —
-    its own fingerprint-tagged trio, pruned like every ingest store."""
-    base = f"del-{os.path.basename(os.path.normpath(sf_dir))}"
-    tag = f"{base}-{_corpus_fingerprint(sf_dir)}"
-    _prune_stale_tags(base, tag)
-    root = os.path.join(INGEST_ROOT, tag)
-    return (
-        os.path.join(root, "arrivals"),
-        os.path.join(root, "store"),
-        os.path.join(root, "checkpoint"),
-    )
-
-
-def stage_delete_batches(spark: SparkSession, sf_dir: str) -> str:
-    """Stage DEL_N_BATCHES single-file arrivals of (doc_id, text, op):
-    batches 0/2/4/5 are adds (doc_id % 4 == 0/1/2/3), batch 1 deletes
-    the fingerprints of docs with doc_id % 4 == 0 AND doc_id % 3 == 0
-    (content that arrived in batch 0), batch 3 deletes fingerprints of
-    docs with doc_id % 4 <= 1 AND doc_id % 5 == 2 (content from batches
-    0 or 2 — some of it re-arrives later as adds, the re-entry case).
-    Deletion requests reference content (text -> fingerprint), carrying
-    the requester's doc_id only as provenance. mtime+name ordering makes
-    file i micro-batch i, the property the oracle's batch arithmetic
-    states."""
-    arrivals, _, _ = delete_ingest_dirs(sf_dir)
+def delete_schedule(spark: SparkSession, sf_dir: str):
+    """Frame schedule of the delete family: DEL_N_BATCHES arrivals of
+    (doc_id, text, op). Batches 0/2/4/5 are adds (doc_id % 4 ==
+    0/1/2/3), batch 1 deletes the fingerprints of docs with doc_id % 4
+    == 0 AND doc_id % 3 == 0 (content that arrived in batch 0), batch 3
+    deletes fingerprints of docs with doc_id % 4 <= 1 AND doc_id % 5 ==
+    2 (content from batches 0 or 2 — some of it re-arrives later as
+    adds, the re-entry case). Deletion requests reference content (text
+    -> fingerprint), carrying the requester's doc_id only as
+    provenance."""
     docs = load_table(spark, sf_dir, "documents")
     mod = F.col("doc_id") % 4
     slots = {
@@ -2096,9 +1659,7 @@ def stage_delete_batches(spark: SparkSession, sf_dir: str) -> str:
         "doc_id", "text", F.lit("del").alias("op")
     )
     assert sorted(slots) == list(range(DEL_N_BATCHES))
-    return _stage_single_file_batches(
-        arrivals, [slots[i] for i in range(DEL_N_BATCHES)]
-    )
+    yield from (slots[i] for i in range(DEL_N_BATCHES))
 
 
 def _live_fps(store_df: DataFrame) -> DataFrame:
@@ -2121,8 +1682,7 @@ def apply_delete_batch(
     (min doc_id) and anti-join against the fingerprints LIVE as of
     earlier batches (NOT ever-seen — re-entry after deletion must win);
     its deletes become distinct tombstone rows. Both land in THIS
-    batch's partition only (exactly-once: a retry rewrites its own
-    output deterministically)."""
+    batch's partition only."""
     spark = batch_df.sparkSession
     winners = (
         batch_df.filter(F.col("op") == "add")
@@ -2149,47 +1709,28 @@ def apply_delete_batch(
         )
     )
     adds.unionByName(dels).write.mode("overwrite").parquet(
-        os.path.join(store_dir, f"batch_id={batch_id}")
+        _batch_dir(store_dir, batch_id)
     )
 
 
 def run_delete_ingest(spark: SparkSession, sf_dir: str) -> str:
-    """Replay the staged add/delete schedule through the ingester
-    (AvailableNow, one file per micro-batch) and return the store.
-    Idempotent per corpus version: the checkpoint remembers processed
-    files. Asserts the file->batch mapping the oracle's arithmetic
-    assumes (every stored add row's doc_id lands in its schedule's
-    batch)."""
-    arrivals, store, checkpoint = delete_ingest_dirs(sf_dir)
-    stage_delete_batches(spark, sf_dir)
-    schema = spark.read.parquet(arrivals).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .format("parquet")
-        .load(arrivals)
+    """Replay the staged add/delete schedule through the ingester and
+    return the store, asserting the file->batch mapping the oracle's
+    arithmetic assumes (every stored add row's doc_id lands in its
+    schedule's batch)."""
+    arrivals, store, checkpoint = ingest_dirs(sf_dir, "del")
+    _stage_single_file_batches(arrivals, delete_schedule(spark, sf_dir))
+    replay_into_store(
+        arrivals_stream(spark, arrivals),
+        checkpoint,
+        lambda df, bid: apply_delete_batch(df, bid, store),
     )
-    q = (
-        stream.writeStream.foreachBatch(
-            lambda df, bid: apply_delete_batch(df, bid, store)
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    _assert_batch_membership(
+        spark,
+        store,
+        F.when(F.col("op") == "add", F.expr(DEL_ADD_CASE)),
+        "delete ingest",
     )
-    q.awaitTermination()
-    bad = (
-        spark.read.parquet(store)
-        .filter(
-            (F.col("op") == "add")
-            & (F.expr(DEL_ADD_CASE) != F.col("batch_id").cast("int"))
-        )
-        .count()
-    )
-    if bad:
-        raise RuntimeError(
-            f"delete ingest: {bad} add rows landed in the wrong micro-batch"
-        )
     return store
 
 
@@ -2243,7 +1784,7 @@ def stream_store_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ORACLE-CHECKED stream/batch equivalence: the staged schedule is
     pure doc_id arithmetic (adds at batches 0/2/4/5 by doc_id % 4,
-    deletes at 1 and 3 by the rules ``stage_delete_batches`` documents),
+    deletes at 1 and 3 by the rules ``delete_schedule`` documents),
     so the converged live set is a closed-form function of the corpus —
     a fingerprint is live iff it has an add batch after its last delete
     batch, its doc_id is the min arrival of its FIRST live add batch
@@ -2280,49 +1821,15 @@ def stream_store_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
 PQD_QUARTERS = 4
 
 
-def pqd_ingest_dirs(sf_dir: str) -> tuple[str, str, str]:
-    """(arrivals, store, checkpoint) for the PQ delete-ingest lifecycle.
-    Tagged by the embeddings corpus fingerprint (streams vectors)."""
-    from airflow_ml_pipeline_spark.operators.similarity import (
-        _embeddings_fingerprint,
-    )
-
-    base = f"pqd-{os.path.basename(os.path.normpath(sf_dir))}"
-    tag = f"{base}-{_embeddings_fingerprint(sf_dir)}"
-    _prune_stale_tags(base, tag)
-    root = os.path.join(INGEST_ROOT, tag)
-    return (
-        os.path.join(root, "arrivals"),
-        os.path.join(root, "store"),
-        os.path.join(root, "checkpoint"),
-    )
-
-
-def stage_pq_delete_batches(spark: SparkSession, sf_dir: str) -> str:
-    """Stage the add/delete schedule as 6 single-file arrivals of
-    (vec_id, label, embedding, op) — mtime+name ordered so file i is
-    micro-batch i. Delete events carry only the key (label/embedding
-    NULL): a deletion request references the indexed vector, not its
-    payload."""
-    arrivals, _, _ = pqd_ingest_dirs(sf_dir)
-    marker = os.path.join(arrivals, "_staged")
-    if os.path.exists(marker):
-        return arrivals
+def pq_delete_schedule(spark: SparkSession, sf_dir: str):
+    """Frame schedule of the PQ delete family: 6 arrivals of (vec_id,
+    label, embedding, op). Delete events carry only the key
+    (label/embedding NULL): a deletion request references the indexed
+    vector, not its payload."""
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "label", "embedding"
     )
-    n_total = emb.count()
-    oob = emb.filter(
-        F.col("vec_id").isNull()
-        | (F.col("vec_id") < 0)
-        | (F.col("vec_id") >= n_total)
-    ).count()
-    if oob:
-        raise RuntimeError(
-            f"pq delete staging: {oob} vec_ids outside [0, {n_total})"
-            " — range staging requires dense 0..n-1 vec_ids"
-        )
-    q = (F.col("vec_id") * PQD_QUARTERS / F.lit(n_total)).cast("int")
+    q = _vec_range(PQD_QUARTERS, _dense_count(emb))
     nulls = [
         F.lit(None).cast(emb.schema["label"].dataType).alias("label"),
         F.lit(None).cast(emb.schema["embedding"].dataType).alias("embedding"),
@@ -2339,9 +1846,7 @@ def stage_pq_delete_batches(spark: SparkSession, sf_dir: str) -> str:
         "vec_id", *nulls, F.lit("del").alias("op")
     )
     assert sorted(slots) == list(range(DEL_N_BATCHES))
-    return _stage_single_file_batches(
-        arrivals, [slots[i] for i in range(DEL_N_BATCHES)]
-    )
+    yield from (slots[i] for i in range(DEL_N_BATCHES))
 
 
 def apply_pq_delete_batch(
@@ -2350,8 +1855,7 @@ def apply_pq_delete_batch(
     """foreachBatch body: encode the batch's adds with the frozen
     artifacts (the SAME ``pq_index`` kernel as the batch encoder and the
     append-only ingester), turn its deletes into distinct tombstone
-    rows, and overwrite only this batch's partition — exactly-once by
-    the module's batch-owned-overwrite contract; no seen-store is
+    rows, and overwrite only this batch's partition — no seen-store is
     needed because encoding is stateless and liveness is resolved at
     read time by event rank."""
     from airflow_ml_pipeline_spark.operators.pq import pq_index
@@ -2379,7 +1883,7 @@ def apply_pq_delete_batch(
         )
     )
     coded.unionByName(dels).write.mode("overwrite").parquet(
-        os.path.join(store_dir, f"batch_id={batch_id}")
+        _batch_dir(store_dir, batch_id)
     )
 
 
@@ -2401,46 +1905,24 @@ def _live_pq_rows(store_df: DataFrame) -> DataFrame:
 
 
 def run_pq_delete_ingest(spark: SparkSession, sf_dir: str) -> str:
-    """Replay the staged add/delete schedule through the PQ ingester
-    (AvailableNow, one file per micro-batch) and return the store.
-    Idempotent per corpus version; asserts the file->batch mapping the
-    oracle's arithmetic assumes."""
-    arrivals, store, checkpoint = pqd_ingest_dirs(sf_dir)
-    stage_pq_delete_batches(spark, sf_dir)
-    schema = spark.read.parquet(arrivals).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .format("parquet")
-        .load(arrivals)
+    """Replay the staged add/delete schedule through the PQ ingester and
+    return the store, asserting the file->batch mapping the oracle's
+    arithmetic assumes."""
+    arrivals, store, checkpoint = ingest_dirs(sf_dir, "pqd", "embeddings")
+    _stage_single_file_batches(arrivals, pq_delete_schedule(spark, sf_dir))
+    replay_into_store(
+        arrivals_stream(spark, arrivals),
+        checkpoint,
+        lambda df, bid: apply_pq_delete_batch(df, bid, store),
     )
-    q = (
-        stream.writeStream.foreachBatch(
-            lambda df, bid: apply_pq_delete_batch(df, bid, store)
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     n_total = load_table(spark, sf_dir, "embeddings").count()
-    quarter = (F.col("vec_id") * PQD_QUARTERS / F.lit(n_total)).cast("int")
+    quarter = _vec_range(PQD_QUARTERS, n_total)
     add_batch = F.lit(DEL_ADD_BATCH[max(DEL_ADD_BATCH)])
     for m, b in sorted(DEL_ADD_BATCH.items())[:-1]:
         add_batch = F.when(quarter == m, b).otherwise(add_batch)
-    bad = (
-        spark.read.option("basePath", store)
-        .parquet(store)
-        .filter(
-            (F.col("op") == "add")
-            & (add_batch != F.col("batch_id").cast("int"))
-        )
-        .count()
+    _assert_batch_membership(
+        spark, store, F.when(F.col("op") == "add", add_batch), "pq delete ingest"
     )
-    if bad:
-        raise RuntimeError(
-            f"pq delete ingest: {bad} add rows landed in the wrong batch"
-        )
     return store
 
 
@@ -2510,8 +1992,7 @@ def compact_delete_store(spark: SparkSession, sf_dir: str) -> str:
     per corpus version; reads against the compacted store are
     BY CONSTRUCTION identical to reads against the full log (the live
     view already selects the max-rank event — tests pin the equality)."""
-    _, store, _ = delete_ingest_dirs(sf_dir)
-    run_delete_ingest(spark, sf_dir)
+    store = run_delete_ingest(spark, sf_dir)
     compacted = f"{store}_compacted"
     marker = os.path.join(compacted, "_compacted")
     if os.path.exists(marker):

@@ -509,6 +509,22 @@ def test_containment_dropped_ids_threshold_semantics(spark):
     assert dropped == {1}
 
 
+def test_containment_dropped_ids_rejects_mixed_fp_types(spark):
+    """A hex-text store joined to binary postings matches no row, which
+    would silently drop nothing — the rule must refuse the pairing."""
+    import pytest
+
+    hist = spark.createDataFrame(
+        [(100, f"{i:032x}") for i in range(6)], "doc_id long, fp string"
+    )
+    batch = hist.selectExpr("doc_id + 1 AS doc_id", "unhex(fp) AS fp")
+    with pytest.raises(TypeError, match="binary vs history string"):
+        dedup.containment_dropped_ids(batch, hist)
+    # equal types still evaluate (the hex twin of the same postings)
+    same = hist.selectExpr("doc_id + 1 AS doc_id", "fp")
+    assert {r.doc_id for r in dedup.containment_dropped_ids(same, hist).collect()} == {101}
+
+
 @settings(max_examples=10, deadline=None)
 @given(
     st.lists(

@@ -308,3 +308,136 @@ def test_asof_view_relates_to_final_state(spark, sf_dir):
             assert asof.get(fp) == st, fp
     # the views genuinely differ (batches 4/5 add new content)
     assert asof != final
+
+
+#: every (family, table) that keeps state under INGEST_ROOT
+_FAMILIES = [
+    ("", "documents"),
+    ("near", "documents"),
+    ("funnel", "documents"),
+    ("pii", "documents"),
+    ("del", "documents"),
+    ("session", "events"),
+    ("tumbling", "events"),
+    ("stateful", "events"),
+    ("ddww", "events"),
+    ("sem", "embeddings"),
+    ("pqe", "embeddings"),
+    ("pqd", "embeddings"),
+    ("pqidx", "embeddings"),
+]
+
+
+def test_ingest_gc_spares_other_families(spark, sf_dir, tmp_path, monkeypatch):
+    """Each family's GC prunes only its own stale tags. The events-keyed
+    timing roots once shared the exact ingester's ``{sf}-`` prefix, so
+    resolving the exact ingester's dirs deleted an aged timing store and
+    checkpoint; now every family's current root survives every other
+    family's GC, while a family's own stale tag is still removed."""
+    import os
+    import time
+
+    monkeypatch.setattr(ingest, "INGEST_ROOT", str(tmp_path))
+    old = time.time() - 3 * 3600
+    roots = []
+    for family, table in _FAMILIES:
+        root = os.path.dirname(ingest.ingest_dirs(sf_dir, family, table).store)
+        os.makedirs(root)
+        os.utime(root, (old, old))
+        roots.append(root)
+    assert len(set(roots)) == len(_FAMILIES)
+    for family, table in _FAMILIES:
+        ingest.ingest_dirs(sf_dir, family, table)
+    assert all(os.path.isdir(r) for r in roots)
+
+    base = os.path.basename(os.path.normpath(sf_dir))
+    stale = tmp_path / f"session-{base}-deadbeefdeadbeef"
+    stale.mkdir()
+    os.utime(stale, (old, old))
+    ingest.ingest_dirs(sf_dir)
+    assert stale.exists(), "the exact ingester must not prune timing tags"
+    ingest.ingest_dirs(sf_dir, "session", "events")
+    assert not stale.exists(), "a family prunes its own stale tags"
+    assert all(os.path.isdir(r) for r in roots)
+
+
+def _tiny_arrivals(spark, path: str) -> str:
+    spark.range(6).selectExpr("id", "id % 3 AS k").coalesce(1).write.parquet(path)
+    return path
+
+
+def test_replay_into_store_scopes_shuffle_partitions(spark, tmp_path):
+    """``shuffle_partitions`` holds for the replay only: the session value
+    is restored after a normal run AND after a batch body that raises."""
+    import pytest
+
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    arrivals = _tiny_arrivals(spark, str(tmp_path / "arrivals"))
+    seen = []
+
+    def write_batch(df, bid):
+        seen.append((bid, spark.conf.get(key), df.count()))
+
+    ingest.replay_into_store(
+        ingest.arrivals_stream(spark, arrivals),
+        str(tmp_path / "ckpt"),
+        write_batch,
+        shuffle_partitions=3,
+    )
+    assert seen == [(0, "3", 6)]
+    assert spark.conf.get(key) == prev
+
+    def failing(df, bid):
+        raise ValueError("planted batch failure")
+
+    with pytest.raises(Exception, match="planted batch failure"):
+        ingest.replay_into_store(
+            ingest.arrivals_stream(spark, arrivals),
+            str(tmp_path / "ckpt_fail"),
+            failing,
+            shuffle_partitions=5,
+        )
+    assert spark.conf.get(key) == prev
+
+    # without the parameter the conf is left alone
+    ingest.replay_into_store(
+        ingest.arrivals_stream(spark, arrivals),
+        str(tmp_path / "ckpt_plain"),
+        lambda df, bid: seen.append((bid, spark.conf.get(key), df.count())),
+    )
+    assert seen[-1] == (0, prev, 6)
+
+
+def test_table_fingerprint_tracks_mtime_size_and_location(tmp_path):
+    """The one table fingerprint changes when a file's mtime or size
+    changes and when the corpus directory moves, and not otherwise."""
+    import os
+    import shutil
+
+    from airflow_ml_pipeline_spark.sources.catalog import table_fingerprint
+
+    sf = tmp_path / "sfX"
+    table = sf / "documents.parquet"
+    table.mkdir(parents=True)
+    part = table / "part-0.parquet"
+    part.write_bytes(b"abc")
+    os.utime(part, (1_000_000, 1_000_000))
+    fp = table_fingerprint(str(sf), "documents")
+    assert len(fp) == 16 and int(fp, 16) >= 0
+    assert table_fingerprint(str(sf), "documents") == fp
+    assert table_fingerprint(str(sf), "events") != fp
+
+    os.utime(part, (2_000_000, 2_000_000))
+    fp_mtime = table_fingerprint(str(sf), "documents")
+    assert fp_mtime != fp
+
+    part.write_bytes(b"abcd")
+    os.utime(part, (2_000_000, 2_000_000))
+    fp_size = table_fingerprint(str(sf), "documents")
+    assert fp_size not in (fp, fp_mtime)
+
+    moved = tmp_path / "elsewhere" / "sfX"
+    shutil.copytree(sf, moved)
+    os.utime(moved / "documents.parquet" / "part-0.parquet", (2_000_000, 2_000_000))
+    assert table_fingerprint(str(moved), "documents") != fp_size

@@ -395,3 +395,31 @@ def test_progress_reports_watermark_dropped_rows(spark, tmp_path):
     run_available_now(windowed, "append", collect_progress=progress)
     assert progress, "recentProgress must be captured"
     assert rows_dropped_by_watermark(progress) == 1
+
+
+def test_anomaly_state_buffer_stays_bounded():
+    """The per-key state of the streaming anomaly scorer never holds more
+    than ANOMALY_BASELINE_ROWS values, however long the micro-batch, and
+    holds exactly the trailing window (what the next batch scores
+    against)."""
+    import pandas as pd
+
+    from airflow_ml_pipeline_spark.operators.events import ANOMALY_BASELINE_ROWS
+    from airflow_ml_pipeline_spark.streaming.stateful import _anomaly_zscores
+
+    class _State:
+        exists, get = False, None
+
+        def update(self, value):
+            self.exists, self.get = True, value
+
+    n = 2 * ANOMALY_BASELINE_ROWS + 3
+    values = [float(i % 7) for i in range(n)]
+    batch = pd.DataFrame(
+        {"event_id": range(n), "ts_us": range(n), "value": values}
+    )
+    state = _State()
+    list(_anomaly_zscores(("view",), iter([batch]), state))
+    assert state.get[0] == values[-ANOMALY_BASELINE_ROWS:]
+    list(_anomaly_zscores(("view",), iter([batch]), state))
+    assert state.get[0] == values[-ANOMALY_BASELINE_ROWS:]
